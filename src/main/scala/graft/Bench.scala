@@ -45,18 +45,7 @@ object Bench {
       // the CPU-dense gram/explode stages (bytes small, CPU/byte huge)
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
         sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      // Join strategy (guide §3.1): sort-merge is Spark's default
-      // preference; a shuffled-hash join skips both sorts and wins when
-      // one side of each partition fits a hash table. Parameterized for
-      // A/B — the per-partition build-side decision is scale-safe
-      // (bounded by partition sizing, not cluster size), unlike a raw
-      // autoBroadcastJoinThreshold bump.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true"))
-      // AQE rewrite of sort-merge -> shuffled-hash when every
-      // post-shuffle partition is under this bound (0 = off, stock)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCAL_MAP", "0"))
+      // stock join strategy (r14 A/B: 70.1 s stock vs 70.8 s shuffled-hash)
       .config("spark.sql.session.timeZone", "UTC")
       // one-time: events.parquet stores INT64 TIMESTAMP(NANOS); every
       // events reader needs this flag, and setting it per query via

@@ -38,7 +38,8 @@ object TextFns {
     * normalize_for_fts output for name/signature/content
     * (/root/reference/src/schema.sql:149-156 "Normalized text
     * (camelCase/snake_case split to words) populated by application",
-    * src/nl/fts.rs:134).
+    * src/nl/fts.rs:134). Served by q94's body keywords and the NL
+    * enrichment's caller/callee text.
     */
   def normSplit(text: Column): Column =
     regexp_replace(
@@ -48,14 +49,6 @@ object TextFns {
           "([A-Z])([A-Z][a-z])", "$1 $2"),
         "([A-Za-z])([0-9])", "$1 $2"),
       "([0-9])([a-z])", "$1 $2")
-
-  /** Driver-side normalize_for_fts (src/nl/fts.rs:134): every
-    * identifier-ish word re-emitted as its split tokens. Applied to
-    * QUERIES before sanitize, exactly the reference's order
-    * (store/search.rs:98 `sanitize_fts_query(&normalize_for_fts(q))`).
-    */
-  def normalizeForFts(s: String): String =
-    if (s == null) "" else tokenizeIdentifier(s).mkString(" ")
 
   /** Whitespace word tokens (for word counts / n-gram fingerprints):
     * split trimmed text on runs of whitespace; empty string → empty array.

@@ -61,17 +61,6 @@ object VectorFns {
   def cosineFromNorms(d: Column, na: Column, nb: Column): Column =
     when(na === 0.0 || nb === 0.0, lit(0.0)).otherwise(d / (na * nb))
 
-  /** Squared euclidean distance. */
-  def l2Sq(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => {
-        val d = x.cast("double") - y.cast("double")
-        d * d
-      }),
-      lit(0.0),
-      (acc, x) => acc + x
-    )
-
   /** L2-normalized copy of the vector (unit length), double elements.
     * Zero vectors pass through unchanged.
     */

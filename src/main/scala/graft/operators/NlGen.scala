@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextFns
 import graft.parser.{Chunker, Fields}
 
 /** Natural-language description generation from chunk metadata — the
@@ -291,13 +292,8 @@ object NlGen {
     * where the row-local map would force a second Dataset pass).
     */
   private[graft] def toksJoinedCol(c: Column): Column =
-    array_join(filter(split(lower(
-      regexp_replace(regexp_replace(regexp_replace(regexp_replace(c,
-        "([a-z0-9])([A-Z])", "$1 $2"),
-        "([A-Z])([A-Z][a-z])", "$1 $2"),
-        "([A-Za-z])([0-9])", "$1 $2"),
-        "([0-9])([a-z])", "$1 $2")),
-      "[^a-z0-9]+"), t => t =!= ""), " ")
+    array_join(filter(split(lower(TextFns.normSplit(c)), "[^a-z0-9]+"),
+      t => t =!= ""), " ")
 
   /** Second-pass enrichment: re-embed chunks with call-graph context
     * (/root/reference/src/cli/enrichment.rs:23-320 +

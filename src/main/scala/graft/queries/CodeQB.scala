@@ -903,19 +903,13 @@ private[queries] trait CodeQB { self: CodeQA with CodeQC =>
        |      '\\n{3,}', chr(10) || chr(10), 'g')) AS clean
        |FROM allsrc""".stripMargin
 
-  /** Identifier-token pipeline as a pure Column expression — the
-    * stateless regexp mirror of TextFns.tokenizeIdentifier that the
-    * q59 oracle already proved bit-equal to the scanner. Used where a
+  /** Identifier-token pipeline as a pure Column expression —
+    * TextFns.normSplit (the stateless regexp mirror of the
+    * tokenizeIdentifier scanner) lowercased and split. Used where a
     * tokenization must be IDENTICAL in Spark and DuckDB without a UDF.
     */
   private def tokenizeCol(c: Column): Column =
-    split(lower(
-      regexp_replace(regexp_replace(regexp_replace(regexp_replace(c,
-        "([a-z0-9])([A-Z])", "$1 $2"),
-        "([A-Z])([A-Z][a-z])", "$1 $2"),
-        "([A-Za-z])([0-9])", "$1 $2"),
-        "([0-9])([a-z])", "$1 $2")),
-      "[^a-z0-9]+")
+    split(lower(graft.functions.TextFns.normSplit(c)), "[^a-z0-9]+")
 
   /** q94 — body-keyword extraction
     * (/root/reference/src/nl/fields.rs:288-305): a function body's

@@ -215,9 +215,9 @@ object HybridQ {
     * binary-fraction factor before the ranking pools — the pure-negative
     * semantics of BatchRetrieval's demotion stage (the blanket
     * body-match variant was measured at −24 pp negation R@1 and
-    * rejected; see the Knobs doc). The oracle replays the whole pipeline
-    * including an independent demotion CTE (floor'd integer
-    * micro-units, the money discipline).
+    * rejected; see the doc of BatchRetrieval's scoring constants). The
+    * oracle replays the whole pipeline including an independent
+    * demotion CTE (floor'd integer micro-units, the money discipline).
     */
   private val negationQueries: Seq[String] = Seq(
     "parse input without config", "render output without cache",
@@ -287,13 +287,13 @@ object HybridQ {
        |  GROUP BY 1, 2, 3)""".stripMargin
 
   /** The shared hot-path oracle generator: replays every stage of
-    * lexicalHotPath (default Knobs) in SQL for a given query batch —
-    * full-profile cdocs, per-query doc_w/nb_w, the type_filtered hard
-    * filter, and (when the batch routes any negation query with a
-    * negated term) the body-match demotion CTE.
+    * lexicalHotPath (at BatchRetrieval's scoring constants) in SQL for
+    * a given query batch — full-profile cdocs, per-query doc_w/nb_w,
+    * the type_filtered hard filter, and (when the batch routes any
+    * negation query with a negated term) the pure-negative demotion CTE.
     */
   private def hotPathSql(queries: Seq[String], k: Int): String = {
-    val knobs = graft.search.BatchRetrieval.Knobs()
+    import graft.search.BatchRetrieval.{NameBoost, NegationDemote, docFieldWeight}
     val routed = graft.search.BatchRetrieval.routeAll(queries)
     val qfValues = routed.flatMap { r =>
       ftsToksOf(r.expanded).distinct.map(t => s"(${sqq(r.id)}, ${sqq(t)})")
@@ -304,16 +304,14 @@ object HybridQ {
     val qmValues = routed.map { r =>
       val toks = ftsToksOf(r.id.toLowerCase)
       val lst = toks.distinct.map(sqq).mkString("[", ", ", "]")
-      val hints = knobs.boostHintsFor(r.category, r.typeHints)
-        .map(sqq).mkString("[", ", ", "]")
-      val hard = knobs.typeFilterHard && r.category == "type_filtered" &&
-        r.typeHints.nonEmpty
+      val hints = r.typeHints.map(sqq).mkString("[", ", ", "]")
+      val hard = r.category == "type_filtered" && r.typeHints.nonEmpty
       s"(${sqq(r.id)}, ${sqq(r.id.toLowerCase)}, ${toks.size}, " +
         s"${r.nameLike}, $lst, $hints, $hard, " +
-        s"${knobs.docWFor(r.category)}e0, ${knobs.nameBoostFor(r.category)}e0)"
+        s"${docFieldWeight(r.category)}e0, ${NameBoost}e0)"
     }.mkString(",\n")
     val negPairs = routed.flatMap(r => r.negTokens.map(t => (r.id, t)))
-    val hasNeg = negPairs.nonEmpty && knobs.negationDemote < 1.0
+    val hasNeg = negPairs.nonEmpty
     val posPairs = routed.filter(_.negTokens.nonEmpty).flatMap { r =>
       val neg = r.negTokens.toSet
       r.expanded.toLowerCase.split("[^a-z0-9]+")
@@ -344,7 +342,7 @@ object HybridQ {
          |ftsn AS (
          |  SELECT f.query_id, f.origin, f.name,
          |    CASE WHEN h.query_id IS NOT NULL
-         |      THEN CAST(FLOOR(f.fts_u * ${knobs.negationDemote}e0) AS BIGINT)
+         |      THEN CAST(FLOOR(f.fts_u * ${NegationDemote}e0) AS BIGINT)
          |      ELSE f.fts_u END AS fts_u
          |  FROM ftsf f LEFT JOIN negonly h
          |    ON h.query_id = f.query_id AND h.origin = f.origin

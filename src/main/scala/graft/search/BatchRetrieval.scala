@@ -21,7 +21,7 @@ import graft.operators.{Fusion, Postings, Scoring, TopK}
   *   name-blended lexical-semantic leg (the NameBlend stand-in for
   *   the environment-stubbed dense/SPLADE encoders: per-query
   *   max-normalized body BM25 blended with the NameMatcher tier score
-  *   at the reference's default name_boost 0.2, candidate.rs:416-440,
+  *   at NameBoost (the reference default is 0.2), candidate.rs:416-440,
   *   gated on name-like queries, name_match.rs:22-78) →
   *   RRF fusion (K=60) keeping a 2×k fused pool (the rrf_fuse
   *   `limit.saturating_mul(2)`, query.rs:610) →
@@ -46,103 +46,33 @@ import graft.operators.{Fusion, Postings, Scoring, TopK}
   */
 object BatchRetrieval {
 
-  /** Reference scoring defaults (scoring/config.rs:37-47 + cli
-    * definitions.rs:189 name_boost, query.rs type_boost 1.2).
-    */
-  val NameBoost = 0.2
-  val TypeBoostFactor = 1.2
   val FtsPoolFactor = 3
   val FusedPoolFactor = 2
 
-  /** Pipeline knobs — the Spark analogue of the reference's scoring
-    * knob registry (scoring/knob.rs SCORING_KNOBS, CQS_TYPE_BOOST env
-    * sweeps). Every reference stage stays enabled by default; two
-    * WEIGHTS depart from the reference's values, both measured on the
-    * real 218-query v3 eval over the real corpus (AblationMain, r12
-    * one-knob-at-a-time + combo sweep):
-    *  - docFieldWeight 0.25 (reference FTS5 column weight: 1.0) —
-    *    at full weight the doc-comment column crowds out definition
-    *    hits for identifier/negation/multi-step queries (overall R@1
-    *    20.2 vs 26.2 at 0.25); at zero it costs behavioral/conceptual
-    *    recall (R@20 53.2 vs 54.1 at 0.25). 0.25 is the measured
-    *    balance point of the lexical-only stack.
-    *  - nameBoost 0.5 (reference: 0.2) — the reference blends the
-    *    NameMatcher tier into a DENSE cosine leg; our stand-in base
-    *    (normalized multi-field BM25) is a weaker semantic signal, so
-    *    the measured-optimal blend weight shifts up.
+  /** The served scoring configuration. The reference keeps a sweepable
+    * knob registry (scoring/knob.rs); its sweeps were run on the real
+    * 218-query v3 eval (r12/r13; R@1/R@5/R@20 pp, pinned in
+    * RealCorpusSpec.pinnedPrior) and one configuration kept:
+    *  - NameBoost 0.5 (reference 0.2 blends into a dense leg; our
+    *    normalized-BM25 base is weaker, so the measured optimum moves
+    *    up; per-category 0.3/0.7/0.8 moved nothing).
+    *  - TypeBoostFactor 1.2 on router type hints of every category
+    *    (type_filtered only: structural R@1 −6.3, overall R@1 −0.9).
+    *  - type_filtered queries with hints hard-filter candidates before
+    *    the pools (scoring/filter.rs): type_filtered R@5 +3.9, R@20 +3.8.
+    *  - negation queries skip synonym expansion: negation R@1 +3.0.
+    *  - NegationDemote 0.25 on docs matching only the negated term:
+    *    recall-neutral on the eval, kept as the scale rail (q206-gated;
+    *    blanket body-match demote: negation R@1 −24).
+    *  - docFieldWeight 0.25 (reference 1.0: overall R@1 20.2 vs 26.2),
+    *    0 for identifier_lookup (R@1 +5.6) and negation (+3.0 at R@1/5/20).
     */
-  final case class Knobs(
-      docFieldWeight: Double = 0.25,
-      expandSynonyms: Boolean = true,
-      nameFieldWeight: Long = 1L,
-      typeBoost: Double = TypeBoostFactor,
-      nameBoost: Double = 0.5,
-      // r13 per-category behavior switches (the reference resolves
-      // behavior per router category, router.rs:126-174), all measured
-      // one-at-a-time + in combos on the real 218-query v3 eval:
-      //  - negationNoExpand: negation queries skip synonym expansion
-      //    (the expanded keyword leg surfaces MORE of the negated
-      //    term's neighborhood — r12's measured -12.1 pp R@1 loss;
-      //    skipping recovers +3.0 pp R@1)
-      //  - negationDemote: docs matching ONLY the negated term (none
-      //    of the positive tokens, any field) drop by a binary-
-      //    fraction factor — floor'd in integer micro-units so the
-      //    DuckDB oracle reproduces it exactly; 1.0 = off. Measured
-      //    recall-NEUTRAL on the 218-eval at every factor (pure-
-      //    negative docs never reached its pools); kept as the scale
-      //    rail — a 100 TB corpus floods negation pools with exactly
-      //    these docs — and gated by q206 where it does fire. The
-      //    r12-verdict blanket body-match demote was measured at
-      //    -24 pp negation R@1 (negation golds routinely mention the
-      //    negated concept) and rejected.
-      //  - negationExcludeTerm: drop the negated tokens from the
-      //    keyword leg entirely. Measured: R@5 +9 pp but R@1 -6 pp
-      //    (the negated term still anchors the gold's neighborhood) —
-      //    off by default, kept as a knob.
-      //  - typeFilterHard: type_filtered queries with extracted hints
-      //    apply the reference's HARD filter (scoring/filter.rs WHERE
-      //    chunk_type IN (...)): candidates outside the hinted types
-      //    drop BEFORE the ranking pools, instead of only the ×1.2
-      //    boost (+3.9 pp R@5 / +3.8 pp R@20 on top of the broadened
-      //    hint extraction)
-      negationNoExpand: Boolean = true,
-      negationDemote: Double = 0.25,
-      negationExcludeTerm: Boolean = false,
-      typeFilterHard: Boolean = true,
-      // per-category weight overrides (measured via AblationMain on
-      // the real 218-query v3 eval; unlisted categories use the global
-      // value above). The reference resolves per-category knobs the
-      // same way (router.rs:692-760). r13 measured table:
-      //  - identifier_lookup docW 0 (+5.6 pp R@1: a doc-comment
-      //    column only dilutes an identifier's definition hit)
-      //  - negation docW 0 (+3.0/+3.0/+3.0 pp: negation queries are
-      //    long NL — their doc-field matches are the negated term's
-      //    neighborhood)
-      //  - conceptual docW 1.0 was measured (+4/+8/+4 conceptual,
-      //    +3/+3/+6 behavioral) and REJECTED: eval multi_step/
-      //    identifier queries that ROUTE as conceptual lose −17.9 pp
-      //    multi_step R@1 / −5.6 pp identifier R@1 — net overall R@1
-      //    −2.3 pp. nameBoost per-category moved
-      //    nothing (identifier 0.3/0.8, negation 0.3/0.7).
-      catDocFieldWeight: Map[String, Double] =
-        Map("identifier_lookup" -> 0.0, "negation" -> 0.0),
-      catNameBoost: Map[String, Double] = Map.empty,
-      // None = the reference behavior (type boost fires whenever hints
-      // extract, any category — query.rs:655); Some(set) restricts the
-      // x1.2 boost to those router categories. Swept because the r13
-      // broadened hint extraction made incidental hints far more
-      // common on non-type_filtered queries — and the reference's
-      // any-category behavior WON: restricting to type_filtered (or
-      // turning the boost off) measured structural R@1 −6.3 pp,
-      // negation R@20 −3.0 pp, overall R@1 −0.9 pp. Keep None.
-      typeBoostCategories: Option[Set[String]] = None) {
-    def boostHintsFor(category: String, hints: Seq[String]): Seq[String] =
-      if (typeBoostCategories.forall(_.contains(category))) hints
-      else Seq.empty
-    def docWFor(category: String): Double =
-      catDocFieldWeight.getOrElse(category, docFieldWeight)
-    def nameBoostFor(category: String): Double =
-      catNameBoost.getOrElse(category, nameBoost)
+  val NameBoost = 0.5
+  val TypeBoostFactor = 1.2
+  val NegationDemote = 0.25
+  def docFieldWeight(category: String): Double = category match {
+    case "identifier_lookup" | "negation" => 0.0
+    case _ => 0.25
   }
 
   final case class Routed(id: String, expanded: String, nameLike: Boolean,
@@ -173,21 +103,6 @@ object BatchRetrieval {
     */
   val KeySep: String = 0.toChar.toString
 
-  /** QUERY-TIME code-only profile view (named code units; markdown
-    * sections rank by different rules in the doc-search path). The
-    * SERVED index is FULL-profile — the reference's chunks_fts indexes
-    * every chunk and type/language restriction is a query-time WHERE
-    * (schema.sql:149-156, scoring/filter.rs) — so this filter is a
-    * view a CALLER applies to its own chunk frame, never an index-time
-    * restriction (r12 verdict wrong #1: building hp_* through this
-    * filter silently dropped the sql/markdown/constant gold categories
-    * from any artifact-served deployment).
-    */
-  def codeChunkFilter(chunks: DataFrame): DataFrame =
-    chunks.filter(
-      col("chunk_type").isin("function", "class", "constructor", "test") &&
-        col("language") =!= "markdown")
-
   /** The keyed projection every hot-path stage shares. */
   def docsOf(chunks: DataFrame): DataFrame =
     chunks.select(
@@ -210,9 +125,9 @@ object BatchRetrieval {
     // leans on; the reference's dense leg doesn't), as raw-UNION-split
     // (R@1 -2.3), and name-field-only (R@1 -3.7). Raw ftsTokens wins
     // the headline metric at every combination measured, so the index
-    // stays raw — TextFns.normSplit/normalizeForFts remain available
-    // and q59 gates the tokenizer for callers that need the
-    // reference's normalized space.
+    // stays raw. The identifier split itself (TextFns.normSplit) serves
+    // q94's body keywords and the NL enrichment text, gated by q94's
+    // oracle and pinned to the tokenizeIdentifier scanner by TextFnsSpec.
     Postings.build(docs, "doc_key", "content"),
     Postings.build(docs.select(col("doc_key"), col("name")),
       "doc_key", "name"),
@@ -286,8 +201,7 @@ object BatchRetrieval {
     * sanitize + synonym expansion (the reference's order: normalize →
     * sanitize → expand, query.rs:563-571), type hints, name-likeness.
     */
-  def routeAll(queries: Seq[String],
-               knobs: Knobs = Knobs()): Seq[Routed] =
+  def routeAll(queries: Seq[String]): Seq[Routed] =
     queries.map { q =>
       val r = Router.route(q)
       val sanitized = Router.sanitizeFtsQuery(q)
@@ -296,20 +210,9 @@ object BatchRetrieval {
       // negation-category queries skip expansion (reference: the
       // per-category behavior switch, router.rs:126-174 — a
       // synonym-widened keyword leg only surfaces more of the negated
-      // neighborhood) and can EXCLUDE the negated term + marker from
-      // the keyword leg entirely, ranking by positive intent only
-      val doExpand = knobs.expandSynonyms &&
-        !(knobs.negationNoExpand && isNeg)
-      val base =
-        if (doExpand) Router.expand(sanitized).mkString(" ")
-        else sanitized
+      // neighborhood)
       val expanded =
-        if (isNeg && knobs.negationExcludeTerm) {
-          val drop = negToks.toSet ++ Router.negationVocab
-          val kept = base.toLowerCase.split("[^a-z0-9]+")
-            .filter(_.nonEmpty).filterNot(drop).mkString(" ")
-          if (kept.nonEmpty) kept else base
-        } else base
+        if (isNeg) sanitized else Router.expand(sanitized).mkString(" ")
       Routed(q, if (expanded.nonEmpty) expanded else sanitized,
         Router.isNameLikeQuery(q), r.typeHints, r.category, negToks)
     }
@@ -320,10 +223,9 @@ object BatchRetrieval {
     */
   def lexicalHotPath(spark: SparkSession, chunks: DataFrame,
                      queries: Seq[String], k: Int = 20,
-                     knobs: Knobs = Knobs(),
                      index: Option[FtsIndex] = None): DataFrame = {
     import spark.implicits._
-    val routed = routeAll(queries, knobs)
+    val routed = routeAll(queries)
     val sep = KeySep
     val docs = docsOf(chunks)
 
@@ -331,12 +233,11 @@ object BatchRetrieval {
     val qFts = routed.map(r => (r.id, r.expanded)).toDF("query_id", "qtext")
       .select(col("query_id"), explode(TextFns.ftsTokens(col("qtext"))).as("token"))
       .distinct()
-    // per-query resolved weights ride in qMeta (the reference resolves
-    // knobs per router category, router.rs:692-760)
+    // the per-category doc weight rides in qMeta (the reference
+    // resolves weights per router category, router.rs:692-760)
     val qMeta = routed.map(r => (r.id, r.id.toLowerCase, r.nameLike,
-        knobs.boostHintsFor(r.category, r.typeHints),
-        knobs.docWFor(r.category), knobs.nameBoostFor(r.category)))
-      .toDF("query_id", "qlower", "name_like", "hints", "doc_w", "nb_w")
+        r.typeHints, docFieldWeight(r.category)))
+      .toDF("query_id", "qlower", "name_like", "hints", "doc_w")
       .withColumn("qwords", TextFns.ftsTokens(col("qlower")))
     // RAW query tokens for the name tiers (NameMatcher matches the
     // query as typed, not the synonym expansion — name_match.rs:103)
@@ -361,7 +262,7 @@ object BatchRetrieval {
     // aggregation are bit-identical — guide §2.4, remove shuffles
     // outright). Missing fields contribute null sums, coalesced to 0
     // exactly like the old full-outer nulls.
-    val anyDocW = routed.exists(r => knobs.docWFor(r.category) > 0)
+    val anyDocW = routed.exists(r => docFieldWeight(r.category) > 0)
     def fieldTerms(f: FieldIndex, tag: String): DataFrame =
       Postings.bm25TermScores(f.postings, f.dl, f.idf, qFts, "doc_key")
         .withColumn("field", lit(tag))
@@ -377,7 +278,7 @@ object BatchRetrieval {
         Seq("query_id"))
       .withColumn("fts_u",
         coalesce(col("bm25_u"), lit(0L)) +
-          lit(knobs.nameFieldWeight) * coalesce(col("name_u"), lit(0L)) +
+          coalesce(col("name_u"), lit(0L)) +
           round(col("doc_w") *
             coalesce(col("doc_u"), lit(0L)), 0).cast("long"))
       .select(col("query_id"), col("doc_key"), col("fts_u"))
@@ -387,7 +288,7 @@ object BatchRetrieval {
     // out-of-type candidates drop BEFORE the ranking pools, so the
     // pool fills with in-type docs instead of same-type noise riding
     // the ×1.2 boost past the gold ----
-    val hardQs = routed.filter(r => knobs.typeFilterHard &&
+    val hardQs = routed.filter(r =>
       r.category == "type_filtered" && r.typeHints.nonEmpty)
     val ftsFiltered =
       if (hardQs.isEmpty) ftsWeighted
@@ -414,7 +315,7 @@ object BatchRetrieval {
     // measured to demote the golds (r13 sweep, −24 pp negation R@1)
     val negQs = routed.filter(_.negTokens.nonEmpty)
     val ftsScore =
-      if (knobs.negationDemote >= 1.0 || negQs.isEmpty) ftsFiltered
+      if (negQs.isEmpty) ftsFiltered
       else {
         val qNeg = negQs.flatMap(r => r.negTokens.map(t => (r.id, t)))
           .toDF("query_id", "token")
@@ -437,7 +338,7 @@ object BatchRetrieval {
           .withColumn("__neg", lit(true))
         ftsFiltered.join(negOnly, Seq("query_id", "doc_key"), "left")
           .withColumn("fts_u", when(col("__neg"),
-            floor(col("fts_u") * lit(knobs.negationDemote)).cast("long"))
+            floor(col("fts_u") * lit(NegationDemote)).cast("long"))
             .otherwise(col("fts_u")))
           .drop("__neg")
       }
@@ -506,12 +407,12 @@ object BatchRetrieval {
       .select(col("query_id"), col("doc_key"), col("body_norm"))
     val semanticLeg = bodyPool
       .join(tierCands, Seq("query_id", "doc_key"), "full_outer")
-      .join(broadcast(qMeta.select(col("query_id"), col("name_like"),
-        col("nb_w"))), Seq("query_id"))
+      .join(broadcast(qMeta.select(col("query_id"), col("name_like"))),
+        Seq("query_id"))
       .withColumn("score", round(
         when(col("name_like"),
-          (lit(1.0) - col("nb_w")) * coalesce(col("body_norm"), lit(0.0)) +
-            col("nb_w") * coalesce(col("tier"), lit(0.0)))
+          lit(1.0 - NameBoost) * coalesce(col("body_norm"), lit(0.0)) +
+            lit(NameBoost) * coalesce(col("tier"), lit(0.0)))
           .otherwise(coalesce(col("body_norm"), lit(0.0))), 6))
       .filter(col("score") > 0)
       .select(col("query_id"), col("doc_key"), col("score"))
@@ -563,7 +464,7 @@ object BatchRetrieval {
         Scoring.conditionalBoost(col("rrf_score") * col("pboost"),
           size(col("hints")) > 0 &&
             array_contains(col("hints"), col("chunk_type")),
-          knobs.typeBoost), 9))
+          TypeBoostFactor), 9))
 
     TopK.perGroup(boosted, Seq(col("query_id")), col("score_r"),
         col("doc_key"), k)

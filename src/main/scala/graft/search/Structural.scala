@@ -58,10 +58,6 @@ object Structural {
         throw new IllegalArgumentException(s"unknown pattern: $other")
     }
 
-  /** Tag a chunk frame with one boolean column per pattern. */
-  def tagAll(content: Column, name: Column): Seq[(String, Column)] =
-    PatternNames.map(p => p -> predicate(p, content, name))
-
   /** Compile a glob to an anchored regex: `**` crosses directory
     * separators, `*` and `?` do not; all other regex metacharacters are
     * escaped literally.

@@ -287,15 +287,6 @@ object FileWalk {
     out.toSeq
   }
 
-  /** The walk as a DataFrame(path, size) — the natural handoff to
-    * `spark.read.format("binaryFile")` / `spark.read.text` over the
-    * yielded path list.
-    */
-  def walkDF(spark: SparkSession, root: String, opts: Options): DataFrame = {
-    import spark.implicits._
-    walk(root, opts).toDF("path", "size")
-  }
-
   /** Extension → Chunker pack name for the ingest handoff (the walk's
     * extension filter runs on raw extensions; this routes survivors to
     * the parser). Unknown extensions pass through as themselves — the

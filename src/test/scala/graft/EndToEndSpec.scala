@@ -4,7 +4,8 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Fusion, Postings, Similarity, TopK}
 import graft.parser.Chunker
-import graft.search.Router
+import graft.search.{BatchRetrieval, Router}
+import graft.sources.Indexes
 
 /** The library-user journey: raw source files → chunks → (deterministic
   * mock) embeddings → posting + vector indexes → routed hybrid query →
@@ -134,7 +135,7 @@ class EndToEndSpec extends SparkTestBase {
     }
     val df = SparkEntry.queries("q205_lexical_hotpath_e2e")(
       spark, "/root/testdata/sf0.01")
-    df.collect()
+    val rows205 = df.collect()
     val all = nodes(df.queryExecution.executedPlan)
     val partials = all.count {
       case w: WindowGroupLimitExec => w.mode.toString == "Partial" &&
@@ -145,5 +146,70 @@ class EndToEndSpec extends SparkTestBase {
       s"the 3xk pool's partial window-group-limit computes $partials times")
     assert(all.exists(_.isInstanceOf[ReusedExchangeExec]),
       "no exchange reuse in the hot-path plan")
+    // the ranked output of the hot path, pinned row for row: q205
+    // lights the type_filtered hard filter and the parent boost, q206
+    // the negation no-expand and pure-negative demotion (the oracle
+    // checks both outside this suite), and the zero doc-field weight of
+    // identifier_lookup and negation queries moves the third batch
+    def ranked(rows: Array[org.apache.spark.sql.Row]) =
+      rows.map(r => (r.getString(0), r.getInt(1), r.getString(2),
+        r.getString(3))).sortBy(r => (r._1, r._2)).toSeq
+    assert(ranked(rows205) == HotPathRows.q205)
+    assert(ranked(SparkEntry.queries("q206_negation_hotpath")(
+      spark, "/root/testdata/sf0.01").collect()) == HotPathRows.q206)
+    assert(ranked(BatchRetrieval.lexicalHotPath(spark,
+      Indexes.codeChunks(spark), HotPathRows.docWQueries, 5,
+      index = Some(Indexes.hpFtsIndex(spark))).collect()) == HotPathRows.docW)
   }
+}
+
+/** Recorded ranked rows (query_id, rank, file, name) at sf0.01 of
+  * q205, q206 and a batch whose ranks the per-category doc-field
+  * weights decide (at a flat 0.25 both queries gain a fourth row).
+  */
+object HotPathRows {
+  val q205: Seq[(String, Int, String, String)] = Seq(
+    ("Depot openRegistry openFallback", 1, "fixtures/Depot.java", "Depot"),
+    ("Depot openRegistry openFallback", 2, "fixtures/Depot.java", "openFallback"),
+    ("Depot openRegistry openFallback", 3, "fixtures/Depot.java", "openRegistry"),
+    ("Depot openRegistry openFallback", 4, "fixtures/help.chm", "Depot Help"),
+    ("how does process work", 1, "fixtures/test_app.py", "test_process"),
+    ("how does process work", 2, "fixtures/util.py", "process"),
+    ("how does process work", 3, "fixtures/util.py", "run"),
+    ("how does process work", 4, "fixtures/util.py", "Runner"),
+    ("list all functions", 1, "fixtures/api.py", "list_items"),
+    ("load_config", 1, "fixtures/app.rs", "load_config"),
+    ("load_config", 2, "fixtures/test_app.py", "test_load_config"),
+    ("load_config", 3, "fixtures/app.rs", "Config"),
+    ("load_config", 4, "fixtures/app.rs", "compose_report"),
+    ("load_config", 5, "fixtures/page.aspx", "Page_Load"),
+    ("tag count", 1, "fixtures/consts.rs", "tag_count"),
+    ("tag count", 2, "fixtures/consts.rs", "tag_of"),
+    ("tag count", 3, "fixtures/units.go", "groupTags"),
+    ("tag count", 4, "fixtures/api.js", "page_label"),
+    ("tag count", 5, "fixtures/app.elm", "view"))
+  val q206: Seq[(String, Int, String, String)] = Seq(
+    ("parse input without config", 1, "fixtures/app.rs", "parse_toml"),
+    ("parse input without config", 2, "fixtures/app.rs", "load_config"),
+    ("parse input without config", 3, "fixtures/app.rs", "compose_report"),
+    ("parse input without config", 4, "fixtures/notes.md", "Pipeline Notes"),
+    ("parse input without config", 5, "fixtures/generic.rs", "map_blobs"),
+    ("render output without cache", 1, "fixtures/test_app.py", "test_render"),
+    ("render output without cache", 2, "fixtures/svc.go", "Render"),
+    ("render output without cache", 3, "fixtures/web.js", "render"),
+    ("render output without cache", 4, "fixtures/web.js", "start"),
+    ("render output without cache", 5, "fixtures/page.aspx", "Page_Load"),
+    ("retries never fallback", 1, "fixtures/patterns.rs", "with_retries"),
+    ("retries never fallback", 2, "fixtures/consts.py", "MAX_RETRIES"),
+    ("retries never fallback", 3, "fixtures/consts.rs", "DEFAULT_RETRIES"),
+    ("retries never fallback", 4, "fixtures/consts.py", "DEFAULTS"),
+    ("retries never fallback", 5, "fixtures/patterns.rs", "Builder"))
+  val docWQueries: Seq[String] = Seq("Widget", "address without guarded")
+  val docW: Seq[(String, Int, String, String)] = Seq(
+    ("Widget", 1, "fixtures/helpers.ts", "Widget"),
+    ("Widget", 2, "fixtures/helpers.ts", "Registry"),
+    ("Widget", 3, "fixtures/helpers.ts", "register"),
+    ("address without guarded", 1, "fixtures/patterns.rs", "guarded"),
+    ("address without guarded", 2, "fixtures/guarded.py", "fetch_guarded"),
+    ("address without guarded", 3, "fixtures/guide.md", "Failover"))
 }

@@ -270,26 +270,26 @@ object RealCorpusSpec {
     * expansion -> multi-field BM25 keyword leg at the 3x pool ->
     * NameMatcher-tier blended lexical-semantic leg -> RRF K=60 at the
     * 2x fused pool -> parent dedup/boost -> type boost -> top-k), with
-    * two weights tuned by the AblationMain sweep (docFieldWeight 0.25,
-    * nameBoost 0.5 — rationale in BatchRetrieval.Knobs). r12 overall:
-    * 26.1/41.7/54.1, with two honest losses (negation R@1 -12.1,
-    * type_filtered R@5 -11.5).
+    * two weights tuned by an ablation sweep (doc-field weight 0.25,
+    * NameBoost 0.5 — one line each in BatchRetrieval's scoring-constant
+    * doc). r12 overall: 26.1/41.7/54.1, with two honest losses
+    * (negation R@1 -12.1, type_filtered R@5 -11.5).
     *
     * r13 re-pin (VERDICT r12 missing #2/#3 + next-round #2-#4): four
     * measured changes, swept one-at-a-time then in combos
-    * (AblationMain r13 waves, ~30 variants):
+    * (r13 ablation waves, ~30 variants):
     *  (a) type-filter shapes broadened to the real v3 phrasings
     *      ("struct definitions in X", "methods on Y", "impl blocks
     *      for Z" — Router.typeDefWords/typeAdjRe) and typePhrases
     *      maps singulars + multi-type hints; the hint boost alone:
     *      type_filtered R@1 +7.7, R@5 +7.7;
     *  (b) the reference's HARD type filter before the pools
-    *      (typeFilterHard): type_filtered R@5 +3.9, R@20 +3.8 more —
+    *      (type_filtered only): type_filtered R@5 +3.9, R@20 +3.8 more —
     *      R@5 0.385 -> 0.500, the verdict's target;
-    *  (c) negation queries skip synonym expansion (negationNoExpand):
+    *  (c) negation queries skip synonym expansion:
     *      negation R@1 +3.0;
-    *  (d) per-category doc-field weights (catDocFieldWeight:
-    *      identifier_lookup 0, negation 0): identifier R@1 +5.6,
+    *  (d) per-category doc-field weights (identifier_lookup 0,
+    *      negation 0): identifier R@1 +5.6,
     *      negation +3.0/+3.0/+3.0 — negation R@1 0.364 -> 0.424,
     *      R@20 fully recovered to 0.727.
     * Deltas vs the r12 pin (R@1/R@5/R@20 pp): overall

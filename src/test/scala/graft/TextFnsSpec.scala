@@ -51,8 +51,5 @@ class TextFnsSpec extends SparkTestBase {
     val want = inputs.map(s =>
       TextFns.tokenizeIdentifier(s).filter(_.length >= 2))
     assert(got == want, s"\n$got\n$want")
-    // driver-side normalizeForFts is the scanner joined by spaces
-    assert(TextFns.normalizeForFts("parseConfigFile") == "parse config file")
-    assert(TextFns.normalizeForFts("fn get_user() {}") == "fn get user")
   }
 }
