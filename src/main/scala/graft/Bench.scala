@@ -140,7 +140,7 @@ object Bench {
     // memory-mapped store (its 2.0 ops/s is measured against sqlite
     // pages held hot across the run, never re-decoding per op).
     // MEMORY_AND_DISK via Dataset.cache, so it can spill, never fail.
-    Indexes.pinArtifacts = !sys.env.get("SPARK_GRAFT_PIN").contains("0")
+    Indexes.pinArtifacts = true
 
     // Phase 2: query batch against the built tables
     // (stable ordering for reproducible interference patterns)

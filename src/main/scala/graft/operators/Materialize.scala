@@ -45,13 +45,7 @@ object Materialize {
       if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
         df.checkpoint(eager = true)
       else df.localCheckpoint(true)
-    val q = live.computeIfAbsent(Thread.currentThread().getId,
-      _ => new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]())
-    out.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD => q.add(l.rdd)
-      case _ =>
-    }
-    out
+    track(out)
   }
 
   /** Cut lineage AND count in ONE Spark job: the checkpoint is marked
@@ -69,13 +63,18 @@ object Materialize {
         df.checkpoint(eager = true)
       else df.localCheckpoint(false)
     val n = out.count()
+    (track(out), n)
+  }
+
+  /** Register a cut frame's checkpoint RDDs with this thread's queue. */
+  private def track(out: DataFrame): DataFrame = {
     val q = live.computeIfAbsent(Thread.currentThread().getId,
       _ => new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]())
     out.queryExecution.analyzed.foreach {
       case l: org.apache.spark.sql.execution.LogicalRDD => q.add(l.rdd)
       case _ =>
     }
-    (out, n)
+    out
   }
 
   private def drain(

@@ -444,7 +444,7 @@ object TextQ {
     // mis-number two colliding distinct spans in one row_number
     // sequence — at ~1e12 spans birthday collisions are expected, and
     // the oracle (PARTITION BY span) would keep the row the engine
-    // dropped (see Indexes.deriveSpan8Rn).
+    // dropped (see the span8_rn entry of Indexes.artifacts).
     val marked = graft.sources.Indexes.span8Rn(s, dir)
     marked.groupBy(col("doc_id")).agg(
       count(lit(1)).as("n_wins"),

@@ -261,13 +261,15 @@ object BatchRetrieval {
     // exact integer micro-unit, so per-field sums regrouped through one
     // aggregation are bit-identical — guide §2.4, remove shuffles
     // outright). Missing fields contribute null sums, coalesced to 0
-    // exactly like the old full-outer nulls.
-    val anyDocW = routed.exists(r => docFieldWeight(r.category) > 0)
+    // exactly like the old full-outer nulls. The doc field joins the
+    // union for every batch, as the oracle's `ftsu` does: a doc-only
+    // match of a zero-doc-weight query stays an fts_u = 0 candidate, so
+    // a query's rows never depend on the other queries in its batch.
     def fieldTerms(f: FieldIndex, tag: String): DataFrame =
       Postings.bm25TermScores(f.postings, f.dl, f.idf, qFts, "doc_key")
         .withColumn("field", lit(tag))
-    val termRows = (Seq(fieldTerms(ix.body, "b"), fieldTerms(ix.name, "n")) ++
-        (if (anyDocW) Seq(fieldTerms(ix.doc, "d")) else Nil))
+    val termRows = Seq(fieldTerms(ix.body, "b"), fieldTerms(ix.name, "n"),
+        fieldTerms(ix.doc, "d"))
       .reduce(_ unionByName _)
     val ftsWeighted = termRows
       .groupBy(col("query_id"), col("doc_key"))

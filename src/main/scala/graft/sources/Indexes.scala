@@ -1,10 +1,13 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Postings, Similarity, TextAnalysis}
+import graft.operators.{Dedup, GraphOps, Materialize, Postings, Similarity, TextAnalysis}
 import graft.parser.{Chunker, CodeFixtures}
+import graft.search.BatchRetrieval
+import graft.search.BatchRetrieval.{FieldIndex, FtsIndex}
 
 /** The persisted-index layer — the Spark analogue of `cqs index`
   * (/root/reference/src/cli/commands/index/build.rs:102): derived
@@ -13,13 +16,23 @@ import graft.parser.{Chunker, CodeFixtures}
   * and written as parquet; queries then read the built tables instead
   * of re-deriving them per query.
   *
-  * Resolution: every accessor falls back to deriving the frame from the
-  * raw tables when no index root is active — the CORRECTNESS gate
-  * (graft.Verify) runs that way, so oracle semantics never depend on a
-  * build having happened. graft.Bench activates the root after its
-  * build phase, giving the honest two-phase shape BASELINE.md's batch
-  * throughput number assumes (the reference's 2.0 ops/s is measured
-  * against prebuilt indexes, never rebuilding per op).
+  * One ordered table (`artifacts`) declares every artifact once: its
+  * name (also its parquet file and build-phase name), its derivation
+  * written against the artifacts it reads, whether it is pinned, and
+  * whether derived mode cuts its lineage. Both modes run that one
+  * derivation:
+  *  - build mode (`buildPhases`, `build`): inputs are the on-disk
+  *    artifacts of earlier phases;
+  *  - derived mode (the typed accessors): the prebuilt artifact when an
+  *    index root is active and holds it, else the derivation with every
+  *    input resolved through the accessors again.
+  *
+  * The CORRECTNESS gate (graft.Verify) runs with no active root, so
+  * oracle semantics never depend on a build having happened. graft.Bench
+  * activates the root after its build phase, giving the honest two-phase
+  * shape BASELINE.md's batch throughput number assumes (the reference's
+  * 2.0 ops/s is measured against prebuilt indexes, never rebuilding per
+  * op).
   *
   * At 100 TB these writes would be bucketed Delta tables (postings
   * bucketed BY token, edges BY src) so query joins are shuffle-free on
@@ -57,29 +70,278 @@ object Indexes {
     */
   @volatile var pinArtifacts: Boolean = false
 
-  /** Only artifacts every consumer scans IN FULL are worth residency —
-    * the iterative graph frames (re-joined once per PageRank/LPA/PPR
-    * round), the per-doc signature/sketch tables, and the IVF index.
-    * Measured A/B (same host, same 13-query subset): pinning these cut
-    * q169 2.9→2.1 s and q134 1.7→1.5 s, while pinning the SELECTIVELY
-    * read artifacts regressed their consumers 2-3x — postings and the
-    * text-wide chunk/file tables win with parquet predicate pushdown +
-    * column pruning (a token-filtered posting probe reads a few row
-    * groups; the in-memory fill materializes the whole table including
-    * content strings), so those stay parquet-served.
+  // Residency is bench-batch-lifetime by design: pinning is enabled
+  // AFTER the build (and its stall re-measure rebuilds) completes, and
+  // Spark recaches by path on any overwrite of a cached location, so
+  // no unpin hook is needed — the JVM exits with the batch.
+
+  /** What a derivation reads. `codeReplicas` is Some(n) in build mode
+    * (inputs are the artifacts already in the build directory, the code
+    * corpus is n scaled fixture replicas) and None in derived mode
+    * (inputs resolve through the accessors, the code corpus is the
+    * fixture files).
     */
-  private val pinnable: Set[String] = Set(
-    "copurchase_edges", "degrees", "edges_outdeg", "oriented_edges",
-    "triangle_counts", "ivf_centroids", "ivf_assigned",
-    "winnow_fps", "winnow_pairs", "neardup_pairs", "simhash_sigs",
-    "doc_spans8", "span8_rn", "gram8_novelty", "source_gram8_kmv",
-    "code_posting_norms", "resolved_calls", "resolved_edges")
-    // (r14 measured, rejected: adding the 7 hp_* artifacts — scanned
-    // in full by every hot-path execution — DOUBLED q205/q206 in a
-    // back-to-back A/B (3.9→12.4 / 3.9→9.6 s): the InMemoryRelation
-    // boundary pins the pre-cache plan and blocks AQE's runtime
-    // broadcast/reuse decisions over those subtrees, which costs far
-    // more than the parquet re-decode saves. hp_* stays parquet-served.)
+  private final class Inputs(val s: SparkSession, val dir: String,
+                             val codeReplicas: Option[Int],
+                             read: String => DataFrame) {
+    def apply(name: String): DataFrame = read(name)
+    /** An input the derivation scans several times: derived mode cuts
+      * its lineage first; build mode reads the on-disk artifact, which
+      * needs no copy.
+      */
+    def cut(name: String): DataFrame =
+      if (codeReplicas.isEmpty) Materialize.stable(read(name)) else read(name)
+    def documents: DataFrame = Tables.documents(s, dir)
+    /** The hot-path FTS index over the chunk input, built once for the
+      * hp_* phases that project it (built per phase, it cost each phase
+      * about 0.1 s of plan analysis and a schema-inference job for its
+      * own `chunks` read).
+      */
+    lazy val hp: FtsIndex = hpIndex(read("chunks"))
+  }
+
+  /** One index artifact. `pinned`: served from executor memory under
+    * `pinArtifacts`. `cutDerived`: derived mode materializes the frame
+    * (its consumers scan it more than once).
+    */
+  private final case class Artifact(name: String, derive: Inputs => DataFrame,
+                                    pinned: Boolean = false,
+                                    cutDerived: Boolean = false)
+
+  /** The hot-path FTS index over a chunk table; the seven hp_* artifacts
+    * are its projections.
+    */
+  private def hpIndex(chunks: DataFrame): FtsIndex =
+    BatchRetrieval.buildFtsIndex(BatchRetrieval.docsOf(chunks))
+
+  /** One BM25 statistic (dl or idf) of each on-disk field posting
+    * table, tagged by field — never re-tokenizing the chunks.
+    */
+  private def hpStats(in: Inputs)(stat: FieldIndex => DataFrame): DataFrame =
+    Seq("body", "name", "doc").map { f =>
+      stat(FieldIndex.from(in(s"hp_${f}_postings"))).withColumn("field", lit(f))
+    }.reduce(_ unionByName _)
+
+  // Only artifacts every consumer scans IN FULL are worth residency —
+  // the iterative graph frames (re-joined once per PageRank/LPA/PPR
+  // round), the per-doc signature/sketch tables, and the IVF index.
+  // Measured A/B (same host, same 13-query subset): pinning these cut
+  // q169 2.9→2.1 s and q134 1.7→1.5 s, while pinning the SELECTIVELY
+  // read artifacts regressed their consumers 2-3x — postings and the
+  // text-wide chunk/file tables win with parquet predicate pushdown +
+  // column pruning (a token-filtered posting probe reads a few row
+  // groups; the in-memory fill materializes the whole table including
+  // content strings), so those stay parquet-served. (r14 measured,
+  // rejected: pinning the 7 hp_* artifacts — scanned in full by every
+  // hot-path execution — DOUBLED q205/q206 in a back-to-back A/B
+  // (3.9→12.4 / 3.9→9.6 s): the InMemoryRelation boundary pins the
+  // pre-cache plan and blocks AQE's runtime broadcast/reuse decisions
+  // over those subtrees. hp_* stays parquet-served.)
+  private val artifacts: Seq[Artifact] = Seq(
+    // FTS/SPLADE posting list over documents
+    Artifact("postings", in => Postings.build(in.documents)),
+    // co-purchase edge set (symmetric, distinct) — the graph-query edge
+    // table (see graft.queries.Graph.edgesSql for the SQL mirror). Dedup
+    // the src < dst HALF of the symmetric pair set, then emit both
+    // orientations with a row-local explode: the distinct — the one
+    // wide shuffle here — carries half the bytes, and the flip costs no
+    // pass (guide §2.3, shuffle fewer bytes). Same row set as
+    // dedup-over-both-orientations: the halves are disjoint and each
+    // unordered pair appears exactly once per direction.
+    Artifact("copurchase_edges", { in =>
+      val li = Tables.lineitem(in.s, in.dir).select(col("l_orderkey"), col("l_partkey"))
+      li.select(col("l_orderkey"), col("l_partkey").as("src"))
+        .join(li.select(col("l_orderkey"), col("l_partkey").as("dst")), Seq("l_orderkey"))
+        .filter(col("src") < col("dst"))
+        .select(col("src"), col("dst"))
+        .distinct()
+        .select(explode(array(
+          struct(col("src"), col("dst")),
+          struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
+        .select(col("e.src").as("src"), col("e.dst").as("dst"))
+    }, pinned = true),
+    // in-degree per node (derived mode feeds both q43's threshold
+    // scalar and its filter from one materialized frame)
+    Artifact("degrees", in => in("copurchase_edges")
+      .groupBy(col("dst").as("node")).agg(count(lit(1)).as("in_degree")),
+      pinned = true, cutDerived = true),
+    // degree-joined edges (src, dst, outdeg) — PageRank's per-round join
+    // input (q134), rescanned once per round; per-run recompute was the
+    // round-7 perf flag
+    Artifact("edges_outdeg", in => GraphOps.degreeJoinedEdges(in("copurchase_edges")),
+      pinned = true, cutDerived = true),
+    // degree-oriented edges (a, b, db) — the triangle query's wedge-join
+    // input (q153), scanned three times by the wedge join + close. The
+    // edge table is symmetric and distinct by construction, so the
+    // undirected dedup is a src < dst filter, not a shuffle; the
+    // orientation re-scans its input three times (degrees + two degree
+    // joins), so derived mode cuts that input too.
+    Artifact("oriented_edges",
+      in => GraphOps.orientEdgesFromSymmetric(in.cut("copurchase_edges")),
+      pinned = true, cutDerived = true),
+    // per-node triangle counts — the wedge join is the O(m^1.5) half of
+    // q153 and run-invariant; the query itself is the top-k consumer
+    Artifact("triangle_counts",
+      in => GraphOps.triangleCountsFromOriented(in("oriented_edges")), pinned = true),
+    // winnowing fingerprints at the q34 parameters (k = 12, w = 16)
+    Artifact("winnow_fps", in => TextAnalysis.winnowFingerprints(in.documents,
+      "doc_id", "text", 12, 16), pinned = true, cutDerived = true),
+    // winnowing shared-fingerprint pair counts with a floor of 2 shared
+    // fingerprints (single-shared pairs are n-gram noise and dominate
+    // row count; every consumer threshold is >= 2)
+    Artifact("winnow_pairs", in => TextAnalysis.winnowSharedPairsFromFps(
+      in("winnow_fps"), "doc_id", minShared = 2L), pinned = true),
+    // MinHash+LSH near-dup pairs at the q28 parameters. Dedup is
+    // pipeline work, not query work: at 100 TB the verified pair table
+    // is materialized once per corpus generation and every consumer
+    // (canonicalization, filtering, reporting) reads it.
+    Artifact("neardup_pairs", in => Dedup.minhashLsh(in.documents, "doc_id", "text",
+      numHashes = 64, numBands = 16, threshold = 0.5), pinned = true),
+    // per-doc 16-bit simhash signatures at the q29 parameters; the pair
+    // scan self-joins them, so an unmaterialized derivation would
+    // tokenize the corpus twice
+    Artifact("simhash_sigs", in => Dedup.simhash16(in.documents, "doc_id", "text",
+      carryCols = Seq("lang")), pinned = true, cutDerived = true),
+    // distinct sliding 8-word grams per document (doc_id, source, gram)
+    // — the shared shingle stream under novelty scoring (q128), the
+    // KMV/HLL sketches (q130/q142 via source_grams8) and the set-algebra
+    // audit (q164), tokenized and exploded once instead of per consumer
+    // query; doc_id determines source, so a (doc_id, gram) projection
+    // needs no re-distinct
+    Artifact("doc_grams8", in => in.documents
+      .select(col("doc_id"), col("source"),
+        graft.functions.TextFns.words(col("text")).as("ws"))
+      .filter(size(col("ws")) >= 8)
+      .select(col("doc_id"), col("source"), explode(expr(
+        "transform(sequence(0, size(ws)-8), i -> array_join(slice(ws, i+1, 8), ' '))"))
+        .as("gram"))
+      .distinct(), cutDerived = true),
+    // distinct (source, gram) — q130 KMV and q142 HLL each read it
+    // twice (sketch branch + exact-audit branch)
+    Artifact("source_grams8", in => in("doc_grams8")
+      .select(col("source"), col("gram")).distinct(), cutDerived = true),
+    // tumbling 8-word spans per document (doc_id, win_idx, span),
+    // including the short tail span — q117's exact-substring span table
+    // (Lee et al. ExactSubstr in tumbling form). NOT derivable from the
+    // sliding table: tail spans shorter than 8 words and sub-8-word
+    // documents exist only here.
+    Artifact("doc_spans8", in => in.documents
+      .select(col("doc_id"), graft.functions.TextFns.words(col("text")).as("ws"))
+      .filter(size(col("ws")) > 0)
+      .select(col("doc_id"), posexplode(expr(
+        "transform(sequence(0, cast(ceil(size(ws) / 8.0) as int) - 1), " +
+          "i -> array_join(slice(ws, i * 8 + 1, 8), ' '))")))
+      .select(col("doc_id"), col("pos").as("win_idx"), col("col").as("span")),
+      pinned = true),
+    // novelty-marked grams (doc_id, gram, first_doc) — q128's window
+    // (min doc_id per gram) at index time; in production the "already
+    // seen" gram set IS an incrementally-maintained index
+    Artifact("gram8_novelty", in => in("doc_grams8")
+      .select(col("doc_id"), col("gram"))
+      .withColumn("first_doc",
+        min(col("doc_id")).over(Window.partitionBy(col("gram")))), pinned = true),
+    // canonical-occurrence-ranked spans (doc_id, win_idx, span, rn) —
+    // q117's row_number over (span → doc_id, win_idx) at index time;
+    // rn = 1 marks the occurrence every later dedup pass keeps. The rank
+    // partitions by the span itself, never a hash of it (a colliding
+    // pair would share one row_number sequence)
+    Artifact("span8_rn", in => in("doc_spans8")
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("span")).orderBy(col("doc_id"), col("win_idx")))),
+      pinned = true),
+    // per-source KMV sketches (source, hx) — the k=64 minimum md5 values
+    // of each source's distinct 8-gram set. KMV sketches merge
+    // associatively, so any source grouping's sketch derives from these
+    // 64-row-per-source tables without rescanning the gram stream
+    // (q164's sketch branch; its exact-audit branch scans source_grams8)
+    Artifact("source_gram8_kmv", in => in("source_grams8")
+      .select(col("source"), md5(col("gram")).as("hx"))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("source")).orderBy(col("hx").asc)))
+      .filter(col("rn") <= 64)
+      .select(col("source"), col("hx")), pinned = true),
+    // IVF (build only: ivfIndex has no derived fallback): cell count
+    // scaled to corpus (~50 vectors/cell, the same sizing knob as the
+    // every-50th placeholder), 3 Lloyd iterations
+    Artifact("ivf_centroids", { in =>
+      val emb = Tables.embeddings(in.s, in.dir)
+      Similarity.trainCentroids(emb, math.max(4L, emb.count() / 50L).toInt, iters = 3)
+    }, pinned = true),
+    Artifact("ivf_assigned", in =>
+      Similarity.ivfAssign(Tables.embeddings(in.s, in.dir), in("ivf_centroids")),
+      pinned = true),
+    // Code-intelligence tables (the reference's store, src/store/mod.rs;
+    // schema.sql:71-105,159-214): corpus → chunks → call/type edges, each
+    // read by every graph query, never re-parsed per query. The one
+    // artifact whose two sources differ: build mode writes the scaled
+    // bench corpus, derived mode serves the fixture files.
+    Artifact("code_files", in => in.codeReplicas.fold(CodeFixtures.filesDf(in.s))(
+      CodeFixtures.scaledFilesDf(in.s, _))),
+    // web-help sites merge to one doc per site BEFORE the parse (the
+    // reference converts the site dir, then chunks the markdown);
+    // derived mode materializes the chunks once so a multi-branch
+    // consumer (q63's six metrics) cannot re-run the parse per branch
+    Artifact("chunks", in => Chunker.chunkDataset(
+      graft.parser.WebhelpConvert.mergeSites(in("code_files"))).toDF(),
+      cutDerived = true),
+    Artifact("call_edges", in => Chunker.callSitesFromChunks(in("chunks")).toDF()),
+    Artifact("type_edges", in => Chunker.typeRefsFromChunks(in("chunks")).toDF()),
+    // posting lists over FUNCTION-chunk contents — the FTS side of the
+    // code-search composites (q51/q66-q72), which would otherwise each
+    // re-tokenize the chunk table per query
+    Artifact("code_postings", in => Postings.build(
+      in("chunks").filter(col("chunk_type") === "function"), "name", "content")),
+    // NL descriptions are a STORE artifact in the reference (the
+    // nl/mod.rs output is what gets embedded and persisted; no query
+    // re-derives it): served to q108 and the enrichment pass
+    Artifact("nl_describe", in => graft.operators.NlGen.describe(in("chunks"))),
+    // chunk-resolved calls with ALL site columns (origin, line,
+    // edge_kind …) — the reference's `calls` table, resolved at index
+    // time (schema.sql:159-168); the trust/kind-aware consumers (q49,
+    // q57, q63, q79, q110) read it — plus the distinct pair view the BFS
+    // family traverses
+    Artifact("resolved_calls", { in =>
+      val fns = in("chunks").filter(col("chunk_type") === "function")
+        .select(col("name").as("callee")).distinct()
+      in("call_edges").join(fns, Seq("callee"))
+    }, pinned = true),
+    Artifact("resolved_edges", in => in("resolved_calls")
+      .select(col("caller"), col("callee")).distinct(), pinned = true),
+    // per-function posting norms (sum tf² — the index metadata every
+    // cosine consumer needs; HNSW/SPLADE indexes store norms the same
+    // way)
+    Artifact("code_posting_norms", in => in("code_postings")
+      .groupBy(col("name")).agg(sum(col("tf") * col("tf")).as("nb2")), pinned = true),
+    // hot-path FTS artifacts: the reference's chunks_fts columns
+    // (content/name/doc, schema.sql:149-156) plus the FTS5 shadow-table
+    // statistics (dl/idf), the containment parents and one metadata row
+    // per doc_key. FULL-profile, the reference's way: chunks_fts indexes
+    // EVERY chunk and chunk-type/language restriction is a query-time
+    // WHERE (scoring/filter.rs) — an index-time profile filter would
+    // silently drop the sql/markdown/constant gold categories (r12
+    // verdict wrong #1)
+    Artifact("hp_body_postings", in => in.hp.body.postings),
+    Artifact("hp_name_postings", in => in.hp.name.postings),
+    Artifact("hp_doc_postings", in => in.hp.doc.postings),
+    Artifact("hp_dl", in => hpStats(in)(_.dl)),
+    Artifact("hp_idf", in => hpStats(in)(_.idf)),
+    Artifact("hp_parents", in => in.hp.parents),
+    Artifact("hp_meta", in => in.hp.meta),
+    // model-encode pass over the document corpus THROUGH the adaptive
+    // session lifecycle (the SPLADE-encode build step's shape): the
+    // 1 MiB arena budget is deliberately smaller than initialBatch's
+    // workspace, so exhaustion → halve → reset → recover runs at corpus
+    // scale on every build, not just in unit tests. Output is the toy
+    // sparse posting table.
+    Artifact("sparse_encode", in =>
+      graft.operators.AdaptiveBatch.encodeSparse(
+        in.documents.select(col("doc_id").as("id"), col("text")),
+        () => new graft.operators.ToyQuantEncoder(1L << 20),
+        initialBatch = 64, resetEvery = 4)
+        .toDF("id", "terms")
+        .select(col("id"), explode(col("terms")).as(Seq("term", "w")))))
+
+  private val byName: Map[String, Artifact] = artifacts.map(a => a.name -> a).toMap
 
   private def prebuilt(s: SparkSession, name: String): Option[DataFrame] =
     rootOpt.flatMap { r =>
@@ -87,408 +349,67 @@ object Indexes {
       if (!new java.io.File(p).exists) None
       else {
         val df = s.read.parquet(p)
-        if (pinArtifacts && pinnable(name) && pinned.add(p)) df.cache()
+        if (pinArtifacts && byName(name).pinned && pinned.add(p)) df.cache()
         Some(df)
       }
     }
 
-  // Residency is bench-batch-lifetime by design: pinning is enabled
-  // AFTER the build (and its stall re-measure rebuilds) completes, and
-  // Spark recaches by path on any overwrite of a cached location, so
-  // no unpin hook is needed — the JVM exits with the batch.
-
-  // ---- derivations (single source of truth for both paths) ----
-
-  /** FTS/SPLADE posting list over documents. */
-  def derivePostings(s: SparkSession, dir: String): DataFrame =
-    Postings.build(Tables.documents(s, dir))
-
-  /** Co-purchase edge set (symmetric, distinct) — the graph-query
-    * edge table (see graft.queries.Graph.edgesSql for the SQL mirror).
+  /** Derived mode: the prebuilt artifact, else its derivation with every
+    * input resolved the same way.
     */
-  def deriveCoPurchaseEdges(s: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_partkey"))
-    val a = li.select(col("l_orderkey"), col("l_partkey").as("src"))
-    val b = li.select(col("l_orderkey"), col("l_partkey").as("dst"))
-    // dedup the src < dst HALF of the symmetric pair set, then emit
-    // both orientations with a row-local explode: the distinct — the
-    // one wide shuffle here — carries half the bytes, and the flip
-    // costs no pass (guide §2.3, shuffle fewer bytes). Same row set as
-    // dedup-over-both-orientations: the halves are disjoint and each
-    // unordered pair appears exactly once per direction.
-    a.join(b, Seq("l_orderkey"))
-      .filter(col("src") < col("dst"))
-      .select(col("src"), col("dst"))
-      .distinct()
-      .select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-  }
-
-  /** In-degree per node over the co-purchase edges. */
-  def deriveDegrees(edges: DataFrame): DataFrame =
-    edges.groupBy(col("dst").as("node"))
-      .agg(count(lit(1)).as("in_degree"))
-
-  /** Degree-joined edges (src, dst, outdeg) — PageRank's per-round join
-    * input (q134). Derived from the edge table once at build; per-run
-    * recompute was the round-7 perf flag.
-    */
-  def deriveEdgesOutdeg(edges: DataFrame): DataFrame =
-    graft.operators.GraphOps.degreeJoinedEdges(edges)
-
-  /** Degree-oriented edges (a, b, db) — the triangle query's wedge-join
-    * input (q153). The undirected-dedup + degree aggregation + two-way
-    * orientation join is per-run-invariant: build-time work.
-    */
-  def deriveOrientedEdges(edges: DataFrame): DataFrame =
-    // the co-purchase edge table is symmetric and distinct by
-    // construction (deriveCoPurchaseEdges), so the undirected dedup is
-    // a src < dst filter, not a shuffle
-    graft.operators.GraphOps.orientEdgesFromSymmetric(edges)
-
-  /** Per-node triangle counts — a per-node graph metric over a static
-    * edge set, persisted at build exactly like `degrees` (the wedge
-    * join is the O(m^1.5) half of q153 and is run-invariant; the query
-    * itself is the top-k consumer).
-    */
-  def deriveTriangleCounts(oriented: DataFrame): DataFrame =
-    graft.operators.GraphOps.triangleCountsFromOriented(oriented)
-
-  /** Winnowing fingerprint table at the q34 parameters. */
-  val WinnowK = 12
-  val WinnowW = 16
-  def deriveWinnowFps(s: SparkSession, dir: String): DataFrame =
-    TextAnalysis.winnowFingerprints(Tables.documents(s, dir),
-      "doc_id", "text", WinnowK, WinnowW)
-
-  /** MinHash+LSH near-dup pairs at the q28 parameters. Dedup is
-    * pipeline work, not query work: at 100 TB the verified pair table
-    * is materialized once per corpus generation and every consumer
-    * (canonicalization, filtering, reporting) reads it.
-    */
-  def deriveNeardupPairs(s: SparkSession, dir: String): DataFrame =
-    Dedup.minhashLsh(Tables.documents(s, dir), "doc_id", "text",
-      numHashes = 64, numBands = 16, threshold = 0.5)
-
-  /** Winnowing shared-fingerprint pair counts with a floor of 2 shared
-    * fingerprints (single-shared pairs are n-gram noise and dominate
-    * row count; every consumer threshold is >= 2). Same artifact
-    * argument as neardup_pairs; derived from a fingerprint frame so the
-    * build feeds it the already-persisted fps table.
-    */
-  val WinnowPairFloor = 2L
-  def deriveWinnowPairs(fps: DataFrame): DataFrame =
-    TextAnalysis.winnowSharedPairsFromFps(fps, "doc_id",
-      minShared = WinnowPairFloor)
-
-  /** Per-doc 16-bit simhash signatures at the q29 parameters — like
-    * postings, the signature table is an index artifact: the pair scan
-    * (self-join + hamming filter) reads it, never re-tokenizing the
-    * corpus.
-    */
-  def deriveSimhashSigs(s: SparkSession, dir: String): DataFrame =
-    Dedup.simhash16(Tables.documents(s, dir), "doc_id", "text",
-      carryCols = Seq("lang"))
-
-  /** Distinct sliding 8-word grams per document (doc_id, source, gram)
-    * — the shared shingle stream under novelty scoring (q128) and,
-    * projected to coarser keys, the KMV/HLL sketches (q130/q142 via
-    * source_grams8) and the set-algebra audit (q164). Each of those
-    * queries previously re-ran tokenize + explode + distinct over the
-    * whole corpus per run; the stream is run-invariant → index-time
-    * work (the code_postings precedent). doc_id determines source, so
-    * a (doc_id, gram) projection needs no re-distinct.
-    */
-  val Gram8K = 8
-  def deriveDocGrams8(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir)
-      .select(col("doc_id"), col("source"),
-        graft.functions.TextFns.words(col("text")).as("ws"))
-      .filter(size(col("ws")) >= Gram8K)
-      .select(col("doc_id"), col("source"), explode(expr(
-        s"transform(sequence(0, size(ws)-$Gram8K), " +
-          s"i -> array_join(slice(ws, i+1, $Gram8K), ' '))")).as("gram"))
-      .distinct()
-
-  /** Distinct (source, gram) view of the sliding 8-gram stream — the
-    * per-source sketch queries' exact input (q130 KMV, q142 HLL read
-    * it twice each: sketch branch + exact-audit branch). Derived from
-    * the per-doc table, never the raw corpus.
-    */
-  def deriveSourceGrams8(docGrams: DataFrame): DataFrame =
-    docGrams.select(col("source"), col("gram")).distinct()
-
-  /** Tumbling 8-word spans per document (doc_id, win_idx, span),
-    * including the short tail span — q117's exact-substring span table
-    * (Lee et al. ExactSubstr in tumbling form). Run-invariant like the
-    * sliding table, but NOT derivable from it: tail spans shorter than
-    * 8 words and sub-8-word documents exist only here.
-    */
-  def deriveDocSpans8(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir)
-      .select(col("doc_id"), graft.functions.TextFns.words(col("text")).as("ws"))
-      .filter(size(col("ws")) > 0)
-      .select(col("doc_id"), posexplode(expr(
-        s"transform(sequence(0, cast(ceil(size(ws) / $Gram8K.0) as int) - 1), " +
-          s"i -> array_join(slice(ws, i * $Gram8K + 1, $Gram8K), ' '))")))
-      .select(col("doc_id"), col("pos").as("win_idx"), col("col").as("span"))
-
-  /** Novelty-marked gram stream (doc_id, gram, first_doc) — q128's
-    * window (min doc_id per gram) applied at index time. In production
-    * the "already seen" gram set IS an incrementally-maintained index
-    * (novelty of an increment is measured against it); re-deriving the
-    * corpus-wide window per query run was the per-run waste.
-    */
-  def deriveGram8Novelty(docGrams: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    docGrams.select(col("doc_id"), col("gram"))
-      .withColumn("first_doc",
-        min(col("doc_id")).over(Window.partitionBy(col("gram"))))
-  }
-
-  /** Per-source KMV sketches (source, hx) — the k=64 minimum md5
-    * values of each source's distinct 8-gram set. KMV sketches merge
-    * associatively (the k smallest of a union are a subset of the
-    * union of per-part k-smallest), so any source grouping's sketch
-    * derives from these 64-row-per-source tables without rescanning
-    * the gram stream — exactly how a 100 TB pipeline maintains them
-    * (per-shard at ingest, merged at query). q164's sketch branch
-    * reads this; its exact-audit branch still scans source_grams8.
-    */
-  val KmvK = 64
-  def deriveSourceKmv(sourceGrams: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    sourceGrams.select(col("source"), md5(col("gram")).as("hx"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("source")).orderBy(col("hx").asc)))
-      .filter(col("rn") <= KmvK)
-      .select(col("source"), col("hx"))
-  }
-
-  /** Canonical-occurrence-ranked span table (doc_id, win_idx, span, rn)
-    * — q117's row_number over (span → doc_id, win_idx order) applied at
-    * index time. The rank is run-invariant: rn = 1 marks the canonical
-    * occurrence every later dedup pass keeps (the reference stores its
-    * dedup verdicts in the index the same way).
-    */
-  def deriveSpan8Rn(spans: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    spans.withColumn("rn", row_number().over(
-      Window.partitionBy(col("span"))
-        .orderBy(col("doc_id"), col("win_idx"))))
-  }
-
-  // ---- code-intelligence index artifacts ----
-  // The reference persists chunks + call/type edges in its store
-  // (/root/reference/src/store/mod.rs; schema.sql:71-105,159-214) and
-  // every graph query reads them — it NEVER re-parses the corpus per
-  // query. Same shape here: the build phase writes code_files /
-  // chunks / call_edges / type_edges, and the code-family queries go
-  // through these accessors. Without an active root (the correctness
-  // gate), the frames derive from the embedded fixture corpus, with the
-  // chunk frame materialized once so a multi-branch consumer (q63's six
-  // metrics) cannot re-run the parse flatMap per branch.
-
-  /** Default bench corpus scale: 250 replicas × 82 chunks ≈ 20.5k
-    * chunks — the reference's own perf-snapshot scale (562 files →
-    * 15,516 chunks, /root/reference/evals/performance-v1.27.0.json).
-    */
-  val DefaultCodeReplicas: Int = 250
-
-  def codeFiles(s: SparkSession): DataFrame =
-    prebuilt(s, "code_files").getOrElse(CodeFixtures.filesDf(s))
-
-  def codeChunks(s: SparkSession): DataFrame =
-    prebuilt(s, "chunks").getOrElse(
-      Chunker.chunkDataset(
-          graft.parser.WebhelpConvert.mergeSites(CodeFixtures.filesDf(s)))
-        .toDF()
-        .transform(graft.operators.Materialize.stable))
-
-  def callEdges(s: SparkSession): DataFrame =
-    prebuilt(s, "call_edges").getOrElse(
-      Chunker.callSitesFromChunks(codeChunks(s)).toDF())
-
-  def typeEdges(s: SparkSession): DataFrame =
-    prebuilt(s, "type_edges").getOrElse(
-      Chunker.typeRefsFromChunks(codeChunks(s)).toDF())
-
-  /** Posting lists over FUNCTION-chunk contents — the FTS side of the
-    * code-search composites (q51/q66-q72). Every one of those queries
-    * seeds from token search over function bodies; without this
-    * artifact each re-tokenizes the whole chunk table per query (8
-    * tokenize passes per batch at corpus scale).
-    */
-  def codePostings(s: SparkSession): DataFrame =
-    prebuilt(s, "code_postings").getOrElse(
-      Postings.build(codeChunks(s).filter(col("chunk_type") === "function"),
-        "name", "content"))
-
-  /** Persisted NL descriptions (origin, name, start_line, chunk_type,
-    * nl) — the reference embeds chunks FROM this stored text; queries
-    * never re-derive it. q108 serves it directly; q109's enrichment
-    * prep builds on it.
-    */
-  def nlDescribe(s: SparkSession): DataFrame =
-    prebuilt(s, "nl_describe").getOrElse(
-      graft.operators.NlGen.describe(codeChunks(s)))
-
-  /** Chunk-RESOLVED distinct call pairs (caller, callee both existing
-    * function names) — the reference's `calls` table
-    * (/root/reference/src/schema.sql:159-168) is stored exactly so
-    * (resolution happens at index time, never per query); the graph
-    * composites here consume the same persisted artifact.
-    */
-  def resolvedCallEdges(s: SparkSession): DataFrame =
-    prebuilt(s, "resolved_edges").getOrElse(
-      resolvedCallsFull(s).select(col("caller"), col("callee")).distinct())
-
-  /** Chunk-resolved call rows with ALL site columns (origin, line,
-    * edge_kind …) — the faithful counterpart of the reference's
-    * `calls` table, which stores line + kind per resolved edge
-    * (schema.sql:159-168). The trust/kind-aware consumers (q49 tier
-    * counts, q57 collapse, q63 health, q79 real-edge graph, q110
-    * caller sections) read this instead of re-semi-joining the raw
-    * site table against the function-name set per query.
-    */
-  def resolvedCallsFull(s: SparkSession): DataFrame =
-    prebuilt(s, "resolved_calls").getOrElse {
-      val fns = codeChunks(s).filter(col("chunk_type") === "function")
-        .select(col("name").as("callee")).distinct()
-      callEdges(s).join(fns, Seq("callee"))
+  private def resolve(s: SparkSession, dir: String, name: String): DataFrame =
+    prebuilt(s, name).getOrElse {
+      val a = byName(name)
+      val df = a.derive(new Inputs(s, dir, None, resolve(s, dir, _)))
+      if (a.cutDerived) Materialize.stable(df) else df
     }
 
-  /** The hot-path FTS field posting tables (content / name / doc) —
-    * prebuilt when an index root is active, else derived through the
-    * exact same BatchRetrieval factories (the correctness gate's
-    * derived mode).
+  // ---- accessors (prebuilt if active, else derived) ----
+
+  def postings(s: SparkSession, dir: String): DataFrame = resolve(s, dir, "postings")
+  def coPurchaseEdges(s: SparkSession, dir: String): DataFrame =
+    resolve(s, dir, "copurchase_edges")
+  def degrees(s: SparkSession, dir: String): DataFrame = resolve(s, dir, "degrees")
+  def edgesOutdeg(s: SparkSession, dir: String): DataFrame = resolve(s, dir, "edges_outdeg")
+  def orientedEdges(s: SparkSession, dir: String): DataFrame =
+    resolve(s, dir, "oriented_edges")
+  def triangleCounts(s: SparkSession, dir: String): DataFrame =
+    resolve(s, dir, "triangle_counts")
+  def winnowFps(s: SparkSession, dir: String): DataFrame = resolve(s, dir, "winnow_fps")
+  def winnowPairs(s: SparkSession, dir: String): DataFrame = resolve(s, dir, "winnow_pairs")
+  def neardupPairs(s: SparkSession, dir: String): DataFrame = resolve(s, dir, "neardup_pairs")
+  def simhashSigs(s: SparkSession, dir: String): DataFrame = resolve(s, dir, "simhash_sigs")
+  def docGrams8(s: SparkSession, dir: String): DataFrame = resolve(s, dir, "doc_grams8")
+  def sourceGrams8(s: SparkSession, dir: String): DataFrame = resolve(s, dir, "source_grams8")
+  def docSpans8(s: SparkSession, dir: String): DataFrame = resolve(s, dir, "doc_spans8")
+  def gram8Novelty(s: SparkSession, dir: String): DataFrame = resolve(s, dir, "gram8_novelty")
+  def span8Rn(s: SparkSession, dir: String): DataFrame = resolve(s, dir, "span8_rn")
+  def sourceGram8Kmv(s: SparkSession, dir: String): DataFrame =
+    resolve(s, dir, "source_gram8_kmv")
+
+  // The code family reads no document table, hence no `dir`.
+  def codeFiles(s: SparkSession): DataFrame = resolve(s, "", "code_files")
+  def codeChunks(s: SparkSession): DataFrame = resolve(s, "", "chunks")
+  def callEdges(s: SparkSession): DataFrame = resolve(s, "", "call_edges")
+  def typeEdges(s: SparkSession): DataFrame = resolve(s, "", "type_edges")
+  def codePostings(s: SparkSession): DataFrame = resolve(s, "", "code_postings")
+  def nlDescribe(s: SparkSession): DataFrame = resolve(s, "", "nl_describe")
+  def resolvedCallsFull(s: SparkSession): DataFrame = resolve(s, "", "resolved_calls")
+  def resolvedCallEdges(s: SparkSession): DataFrame = resolve(s, "", "resolved_edges")
+  def codePostingNorms(s: SparkSession): DataFrame = resolve(s, "", "code_posting_norms")
+
+  /** The hot-path FTS index: the seven prebuilt hp_* artifacts, else
+    * the derivation they project, over the chunk table.
     */
-  def hpFtsIndex(s: SparkSession): graft.search.BatchRetrieval.FtsIndex = {
-    import graft.search.BatchRetrieval
-    import graft.search.BatchRetrieval.{FieldIndex, FtsIndex}
-    (prebuilt(s, "hp_body_postings"), prebuilt(s, "hp_name_postings"),
-      prebuilt(s, "hp_doc_postings"),
-      prebuilt(s, "hp_dl"), prebuilt(s, "hp_idf"),
-      prebuilt(s, "hp_parents"), prebuilt(s, "hp_meta")) match {
-      case (Some(b), Some(n), Some(d), Some(dl), Some(idf),
-            Some(par), Some(meta)) =>
+  def hpFtsIndex(s: SparkSession): FtsIndex =
+    artifacts.map(_.name).filter(_.startsWith("hp_")).flatMap(prebuilt(s, _)) match {
+      case Seq(b, n, d, dl, idf, par, meta) =>
         def fi(f: String, p: DataFrame) = FieldIndex(p,
           dl.filter(col("field") === f).drop("field"),
           idf.filter(col("field") === f).drop("field"))
         FtsIndex(fi("body", b), fi("name", n), fi("doc", d), par, meta)
-      case _ => BatchRetrieval.buildFtsIndex(
-        BatchRetrieval.docsOf(codeChunks(s)))
+      case _ => hpIndex(codeChunks(s))
     }
-  }
-
-  /** Per-function posting norms (Σ tf²) — cosine-denominator index
-    * metadata, persisted like any vector index stores its norms.
-    */
-  def codePostingNorms(s: SparkSession): DataFrame =
-    prebuilt(s, "code_posting_norms").getOrElse(
-      codePostings(s).groupBy(col("name"))
-        .agg(sum(col("tf") * col("tf")).as("nb2")))
-
-  // ---- accessors (prebuilt if active, else derived) ----
-
-  def postings(s: SparkSession, dir: String): DataFrame =
-    prebuilt(s, "postings").getOrElse(derivePostings(s, dir))
-
-  def coPurchaseEdges(s: SparkSession, dir: String): DataFrame =
-    prebuilt(s, "copurchase_edges").getOrElse(deriveCoPurchaseEdges(s, dir))
-
-  /** Degrees: prebuilt table, or derived + materialized (the derived
-    * frame feeds both the threshold scalar and the filter in q43).
-    */
-  def degrees(s: SparkSession, dir: String): DataFrame =
-    prebuilt(s, "degrees").getOrElse(
-      deriveDegrees(deriveCoPurchaseEdges(s, dir)).transform(graft.operators.Materialize.stable))
-
-  /** Degree-joined edges: prebuilt, or derived + materialized (the
-    * frame is rescanned once per PageRank round).
-    */
-  def edgesOutdeg(s: SparkSession, dir: String): DataFrame =
-    prebuilt(s, "edges_outdeg").getOrElse(
-      deriveEdgesOutdeg(coPurchaseEdges(s, dir))
-        .transform(graft.operators.Materialize.stable))
-
-  /** Oriented edges: prebuilt, or derived + materialized (the frame is
-    * scanned three times by the wedge join + close).
-    */
-  def orientedEdges(s: SparkSession, dir: String): DataFrame =
-    prebuilt(s, "oriented_edges").getOrElse(
-      // derived mode: the symmetric-input orientation re-scans its
-      // input three times (degrees + two degree joins), so cut the
-      // co-purchase derivation's lineage first; build mode reads the
-      // on-disk artifact and needs no copy
-      deriveOrientedEdges(coPurchaseEdges(s, dir)
-          .transform(graft.operators.Materialize.stable))
-        .transform(graft.operators.Materialize.stable))
-
-  /** Triangle counts: prebuilt, or derived from the (possibly also
-    * derived) oriented-edge frame.
-    */
-  def triangleCounts(s: SparkSession, dir: String): DataFrame =
-    prebuilt(s, "triangle_counts").getOrElse(
-      deriveTriangleCounts(orientedEdges(s, dir)))
-
-  def winnowFps(s: SparkSession, dir: String): DataFrame =
-    prebuilt(s, "winnow_fps").getOrElse(
-      deriveWinnowFps(s, dir).transform(graft.operators.Materialize.stable))
-
-  def neardupPairs(s: SparkSession, dir: String): DataFrame =
-    prebuilt(s, "neardup_pairs").getOrElse(deriveNeardupPairs(s, dir))
-
-  /** Simhash signatures: prebuilt, or derived + materialized (the
-    * frame is self-joined, so an unmaterialized derivation would
-    * tokenize the corpus twice).
-    */
-  def simhashSigs(s: SparkSession, dir: String): DataFrame =
-    prebuilt(s, "simhash_sigs").getOrElse(
-      deriveSimhashSigs(s, dir).transform(graft.operators.Materialize.stable))
-
-  /** Winnow pair counts: prebuilt, or derived from the (possibly also
-    * derived) fingerprint frame.
-    */
-  def winnowPairs(s: SparkSession, dir: String): DataFrame =
-    prebuilt(s, "winnow_pairs").getOrElse(
-      deriveWinnowPairs(winnowFps(s, dir)))
-
-  /** Per-doc sliding 8-grams: prebuilt, or derived + materialized (the
-    * fallback serves queries that also feed the coarser projections,
-    * so the corpus explode must not re-run per consumer branch).
-    */
-  def docGrams8(s: SparkSession, dir: String): DataFrame =
-    prebuilt(s, "doc_grams8").getOrElse(
-      deriveDocGrams8(s, dir).transform(graft.operators.Materialize.stable))
-
-  /** Per-source distinct 8-grams: prebuilt, or derived + materialized
-    * (q130/q142 each scan it twice: sketch + exact audit).
-    */
-  def sourceGrams8(s: SparkSession, dir: String): DataFrame =
-    prebuilt(s, "source_grams8").getOrElse(
-      deriveSourceGrams8(docGrams8(s, dir))
-        .transform(graft.operators.Materialize.stable))
-
-  /** Tumbling 8-word spans: prebuilt, or derived (q117 scans once). */
-  def docSpans8(s: SparkSession, dir: String): DataFrame =
-    prebuilt(s, "doc_spans8").getOrElse(deriveDocSpans8(s, dir))
-
-  /** Novelty-marked grams: prebuilt, or derived (scanned once). */
-  def gram8Novelty(s: SparkSession, dir: String): DataFrame =
-    prebuilt(s, "gram8_novelty").getOrElse(
-      deriveGram8Novelty(docGrams8(s, dir)))
-
-  /** Rank-marked spans: prebuilt, or derived (scanned once). */
-  def span8Rn(s: SparkSession, dir: String): DataFrame =
-    prebuilt(s, "span8_rn").getOrElse(deriveSpan8Rn(docSpans8(s, dir)))
-
-  /** Per-source KMV sketches: prebuilt, or derived (tiny output). */
-  def sourceGram8Kmv(s: SparkSession, dir: String): DataFrame =
-    prebuilt(s, "source_gram8_kmv").getOrElse(
-      deriveSourceKmv(sourceGrams8(s, dir)))
 
   /** Trained IVF index (centroids + assignments) — bench/serving path
     * only; there is deliberately NO derived fallback (the oracle-gated
@@ -503,6 +424,14 @@ object Indexes {
 
   // ---- build phase ----
 
+  /** Bench code-corpus scale: SPARK_GRAFT_CODE_REPLICAS, else 250
+    * replicas × 82 chunks ≈ 20.5k chunks — the reference's own
+    * perf-snapshot scale (562 files → 15,516 chunks, the reference's
+    * evals/performance-v1.27.0.json).
+    */
+  val DefaultCodeReplicas: Int =
+    sys.env.get("SPARK_GRAFT_CODE_REPLICAS").fold(250)(_.toInt)
+
   /** The build as an ordered (name, derivation-thunk) list. Each thunk
     * reads its inputs from the ON-DISK artifacts of earlier phases
     * (resolved lazily inside the thunk), so any single phase can be
@@ -514,123 +443,9 @@ object Indexes {
     */
   def buildPhases(s: SparkSession, dir: String, out: String,
                   codeReplicas: Int): Seq[(String, () => DataFrame)] = {
-    def rd(name: String) = s.read.parquet(s"$out/$name.parquet")
-    Seq(
-      "postings" -> (() => derivePostings(s, dir)),
-      "copurchase_edges" -> (() => deriveCoPurchaseEdges(s, dir)),
-      "degrees" -> (() => deriveDegrees(rd("copurchase_edges"))),
-      // graph-query join inputs, derived from the ON-DISK edge table
-      // (per-run-invariant halves of q134 PageRank / q153 triangles)
-      "edges_outdeg" -> (() => deriveEdgesOutdeg(rd("copurchase_edges"))),
-      "oriented_edges" -> (() => deriveOrientedEdges(rd("copurchase_edges"))),
-      "triangle_counts" -> (() => deriveTriangleCounts(rd("oriented_edges"))),
-      "winnow_fps" -> (() => deriveWinnowFps(s, dir)),
-      "winnow_pairs" -> (() => deriveWinnowPairs(rd("winnow_fps"))),
-      "neardup_pairs" -> (() => deriveNeardupPairs(s, dir)),
-      "simhash_sigs" -> (() => deriveSimhashSigs(s, dir)),
-      // shared 8-gram shingle stream (q128/q164) + its per-source
-      // projection (q130/q142) + the tumbling span table (q117): the
-      // corpus tokenize/explode/distinct runs once here instead of once
-      // per consumer query per run
-      "doc_grams8" -> (() => deriveDocGrams8(s, dir)),
-      "source_grams8" -> (() => deriveSourceGrams8(rd("doc_grams8"))),
-      "doc_spans8" -> (() => deriveDocSpans8(s, dir)),
-      "gram8_novelty" -> (() => deriveGram8Novelty(rd("doc_grams8"))),
-      "span8_rn" -> (() => deriveSpan8Rn(rd("doc_spans8"))),
-      "source_gram8_kmv" -> (() => deriveSourceKmv(rd("source_grams8"))),
-      // IVF: cell count scaled to corpus (~50 vectors/cell, the same
-      // sizing knob as the every-50th placeholder), 3 Lloyd iterations
-      "ivf_centroids" -> (() => {
-        val emb = Tables.embeddings(s, dir)
-        val kCells = math.max(4L, emb.count() / 50L).toInt
-        Similarity.trainCentroids(emb, kCells, iters = 3)
-      }),
-      "ivf_assigned" -> (() =>
-        Similarity.ivfAssign(Tables.embeddings(s, dir), rd("ivf_centroids"))),
-      // Code-intelligence tables: corpus-scale synthetic repo → chunks →
-      // call/type edges, each derived from the previous ON-DISK artifact
-      // (the parse runs exactly once; edge extraction reads the chunk
-      // table — the reference's store shape).
-      "code_files" -> (() => CodeFixtures.scaledFilesDf(s, codeReplicas)),
-      // web-help sites merge to one doc per site BEFORE the parse (the
-      // reference converts the site dir, then chunks the markdown)
-      "chunks" -> (() => Chunker.chunkDataset(
-        graft.parser.WebhelpConvert.mergeSites(rd("code_files"))).toDF()),
-      "call_edges" -> (() => Chunker.callSitesFromChunks(rd("chunks")).toDF()),
-      "type_edges" -> (() => Chunker.typeRefsFromChunks(rd("chunks")).toDF()),
-      "code_postings" -> (() =>
-        Postings.build(rd("chunks").filter(col("chunk_type") === "function"),
-          "name", "content")),
-      // NL descriptions are a STORE artifact in the reference (the
-      // nl/mod.rs output is what gets embedded and persisted; no query
-      // re-derives it) — same here: described once from the on-disk
-      // chunk table, served to q108 and the enrichment pass.
-      "nl_describe" -> (() => graft.operators.NlGen.describe(rd("chunks"))),
-      // chunk-resolved calls (the reference's `calls` table,
-      // schema.sql:159-168 — resolved at index time): the full row set
-      // with line/kind columns, plus the distinct pair view the BFS
-      // family traverses
-      "resolved_calls" -> (() =>
-        rd("call_edges").join(
-          rd("chunks").filter(col("chunk_type") === "function")
-            .select(col("name").as("callee")).distinct(), Seq("callee"))),
-      "resolved_edges" -> (() =>
-        rd("resolved_calls").select(col("caller"), col("callee")).distinct()),
-      // per-function posting norms (sum tf² — the index metadata every
-      // cosine consumer needs; HNSW/SPLADE indexes store norms the same
-      // way)
-      "code_posting_norms" -> (() =>
-        rd("code_postings").groupBy(col("name"))
-          .agg(sum(col("tf") * col("tf")).as("nb2"))),
-      // hot-path FTS field postings (the reference's chunks_fts
-      // columns — content/name/doc, schema.sql:149-156 — are INDEX
-      // artifacts: the hybrid hot path never tokenizes the corpus at
-      // query time)
-      // FULL-profile, the reference's way: chunks_fts indexes EVERY
-      // chunk (schema.sql:149-156) and chunk-type/language restriction
-      // is a query-time WHERE (scoring/filter.rs) — an index-time
-      // profile filter would silently drop the sql/markdown/constant
-      // gold categories from any artifact-served deployment (r12
-      // verdict wrong #1)
-      "hp_body_postings" -> (() =>
-        graft.search.BatchRetrieval.fieldPostings(
-          graft.search.BatchRetrieval.docsOf(rd("chunks")))._1),
-      "hp_name_postings" -> (() =>
-        graft.search.BatchRetrieval.fieldPostings(
-          graft.search.BatchRetrieval.docsOf(rd("chunks")))._2),
-      "hp_doc_postings" -> (() =>
-        graft.search.BatchRetrieval.fieldPostings(
-          graft.search.BatchRetrieval.docsOf(rd("chunks")))._3),
-      // per-field BM25 statistics (dl / idf) — the FTS5 shadow-table
-      // quantities, materialized so query-time scoring is pure
-      // selective joins with zero corpus-wide aggregation
-      "hp_dl" -> (() => Seq("body", "name", "doc").map { f =>
-        Postings.bm25Stats(rd(s"hp_${f}_postings"), "doc_key")._1
-          .withColumn("field", lit(f))
-      }.reduce(_ unionByName _)),
-      "hp_idf" -> (() => Seq("body", "name", "doc").map { f =>
-        Postings.bm25Stats(rd(s"hp_${f}_postings"), "doc_key")._2
-          .withColumn("field", lit(f))
-      }.reduce(_ unionByName _)),
-      // containment parents + deterministic per-key metadata (the
-      // reference's stored parent_id / parent_type_name columns)
-      "hp_parents" -> (() => graft.search.BatchRetrieval.parentsOf(
-        graft.search.BatchRetrieval.docsOf(rd("chunks")))),
-      "hp_meta" -> (() => graft.search.BatchRetrieval.metaOf(
-        graft.search.BatchRetrieval.docsOf(rd("chunks")))),
-      // model-encode pass over the document corpus THROUGH the adaptive
-      // session lifecycle (the SPLADE-encode build step's shape): the
-      // 1 MiB arena budget is deliberately smaller than initialBatch's
-      // workspace, so exhaustion → halve → reset → recover runs at
-      // corpus scale on every build, not just in unit tests. Output is
-      // the toy sparse posting table.
-      "sparse_encode" -> (() =>
-        graft.operators.AdaptiveBatch.encodeSparse(
-          Tables.documents(s, dir).select(col("doc_id").as("id"), col("text")),
-          () => new graft.operators.ToyQuantEncoder(1L << 20),
-          initialBatch = 64, resetEvery = 4)
-          .toDF("id", "terms")
-          .select(col("id"), explode(col("terms")).as(Seq("term", "w")))))
+    val in = new Inputs(s, dir, Some(codeReplicas),
+      n => s.read.parquet(s"$out/$n.parquet"))
+    artifacts.map(a => a.name -> (() => a.derive(in)))
   }
 
   private def timedWrite(out: String)(name: String)(
@@ -645,8 +460,7 @@ object Indexes {
     * once the build is complete.
     */
   def build(s: SparkSession, dir: String, out: String,
-            codeReplicas: Int = sys.env.getOrElse("SPARK_GRAFT_CODE_REPLICAS",
-              DefaultCodeReplicas.toString).toInt): Seq[(String, Double)] = {
+            codeReplicas: Int = DefaultCodeReplicas): Seq[(String, Double)] = {
     new java.io.File(out).mkdirs()
     buildPhases(s, dir, out, codeReplicas).map { case (n, th) =>
       timedWrite(out)(n)(th())
@@ -659,14 +473,13 @@ object Indexes {
     * is value-identical; only the timing is new.
     */
   def rebuildPhase(s: SparkSession, dir: String, out: String, name: String,
-                   codeReplicas: Int = sys.env.getOrElse("SPARK_GRAFT_CODE_REPLICAS",
-                     DefaultCodeReplicas.toString).toInt): Double =
+                   codeReplicas: Int = DefaultCodeReplicas): Double =
     buildPhases(s, dir, out, codeReplicas)
       .collectFirst { case (n, th) if n == name =>
         timedWrite(out)(n)(th())._2 }
       .getOrElse(sys.error(s"rebuildPhase: unknown phase $name"))
 
-  /** Timed dedup-family derivations at an arbitrary sf dir — the
+  /** Timed dedup-family build phases at an arbitrary sf dir — the
     * bench's scale-growth probe: run at two sf points (10× the
     * documents), sub-quadratic growth is evident from the wall-clock
     * ratio (an all-pairs formulation would grow ~100×; the bucketed
@@ -675,17 +488,10 @@ object Indexes {
     */
   def dedupProbe(s: SparkSession, dir: String, out: String): Seq[(String, Double)] = {
     new java.io.File(out).mkdirs()
-    def timed(name: String)(df: => DataFrame): (String, Double) = {
-      val t0 = System.nanoTime()
-      df.write.mode("overwrite").parquet(s"$out/$name.parquet")
-      name -> (System.nanoTime() - t0) / 1e9
+    val dedup = Set("winnow_fps", "winnow_pairs", "neardup_pairs", "simhash_sigs")
+    buildPhases(s, dir, out, 0).collect { case (n, th) if dedup(n) =>
+      timedWrite(out)(n)(th())
     }
-    val t4 = timed("winnow_fps")(deriveWinnowFps(s, dir))
-    val fps = s.read.parquet(s"$out/winnow_fps.parquet")
-    val t8 = timed("winnow_pairs")(deriveWinnowPairs(fps))
-    val t7 = timed("neardup_pairs")(deriveNeardupPairs(s, dir))
-    val t9 = timed("simhash_sigs")(deriveSimhashSigs(s, dir))
-    Seq(t4, t8, t7, t9)
   }
 
   /** Bucketed companions of the two join-heavy index tables, written
@@ -707,8 +513,8 @@ object Indexes {
       name -> (System.nanoTime() - t0) / 1e9
     }
     Seq(
-      timed("graft_postings_b")(derivePostings(s, dir), "token"),
-      timed("graft_edges_b")(deriveCoPurchaseEdges(s, dir), "src"))
+      timed("graft_postings_b")(postings(s, dir), "token"),
+      timed("graft_edges_b")(coPurchaseEdges(s, dir), "src"))
   }
 
   /** Catalog-backed bucketed accessors (None when not built). */

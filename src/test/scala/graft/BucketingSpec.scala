@@ -63,10 +63,10 @@ class BucketingSpec extends SparkTestBase {
       assert(!plan.contains("Exchange"),
         s"bucketed posting self-join must not shuffle:\n$plan")
       // bucketed content == plain derivation
-      val plain = graft.sources.Indexes.derivePostings(spark, dir)
+      val plain = graft.sources.Indexes.postings(spark, dir)
       assert(b.exceptAll(plain).isEmpty && plain.exceptAll(b).isEmpty)
       val be = graft.sources.Indexes.bucketedEdges(spark).get
-      val pe = graft.sources.Indexes.deriveCoPurchaseEdges(spark, dir)
+      val pe = graft.sources.Indexes.coPurchaseEdges(spark, dir)
       assert(be.exceptAll(pe).isEmpty && pe.exceptAll(be).isEmpty)
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")

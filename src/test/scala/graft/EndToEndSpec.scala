@@ -154,18 +154,25 @@ class EndToEndSpec extends SparkTestBase {
     def ranked(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getString(0), r.getInt(1), r.getString(2),
         r.getString(3))).sortBy(r => (r._1, r._2)).toSeq
+    def hotPath(qs: Seq[String]) = ranked(BatchRetrieval.lexicalHotPath(spark,
+      Indexes.codeChunks(spark), qs, 5,
+      index = Some(Indexes.hpFtsIndex(spark))).collect())
     assert(ranked(rows205) == HotPathRows.q205)
     assert(ranked(SparkEntry.queries("q206_negation_hotpath")(
       spark, "/root/testdata/sf0.01").collect()) == HotPathRows.q206)
-    assert(ranked(BatchRetrieval.lexicalHotPath(spark,
-      Indexes.codeChunks(spark), HotPathRows.docWQueries, 5,
-      index = Some(Indexes.hpFtsIndex(spark))).collect()) == HotPathRows.docW)
+    assert(hotPath(HotPathRows.docWQueries) == HotPathRows.docW)
+    // a query's rows do not depend on its batch: alone they equal its
+    // rows beside a query of positive doc weight
+    HotPathRows.docWQueries.foreach { q =>
+      assert(hotPath(Seq(q)) ==
+        hotPath(Seq(q, "how does process work")).filter(_._1 == q), q)
+    }
   }
 }
 
 /** Recorded ranked rows (query_id, rank, file, name) at sf0.01 of
   * q205, q206 and a batch whose ranks the per-category doc-field
-  * weights decide (at a flat 0.25 both queries gain a fourth row).
+  * weights decide (at a flat 0.25 "address without guarded" reorders).
   */
 object HotPathRows {
   val q205: Seq[(String, Int, String, String)] = Seq(
@@ -209,7 +216,9 @@ object HotPathRows {
     ("Widget", 1, "fixtures/helpers.ts", "Widget"),
     ("Widget", 2, "fixtures/helpers.ts", "Registry"),
     ("Widget", 3, "fixtures/helpers.ts", "register"),
+    ("Widget", 4, "fixtures/widgets.js", "make_button"),
     ("address without guarded", 1, "fixtures/patterns.rs", "guarded"),
     ("address without guarded", 2, "fixtures/guarded.py", "fetch_guarded"),
-    ("address without guarded", 3, "fixtures/guide.md", "Failover"))
+    ("address without guarded", 3, "fixtures/guide.md", "Failover"),
+    ("address without guarded", 4, "fixtures/api.js", "validate_email"))
 }

@@ -21,12 +21,52 @@ class IndexesSpec extends SparkTestBase {
     // per-source projection + tumbling span table
     "q117_exact_substr_dedup", "q128_gram_novelty", "q130_kmv_cardinality",
     "q142_hll_cardinality", "q164_kmv_set_algebra")
-  // (q205 consumes the hp_* artifacts but canNOT join this parity
-  // list: the test builds at codeReplicas=3, which SCALES and renames
-  // the code corpus, so index-mode results differ legitimately.
-  // Derived/prebuilt value parity for the hp_* artifacts holds by
-  // construction — hpFtsIndex's fallback runs the exact factories the
-  // build phases persist.)
+  // (the code-family consumers canNOT join this parity list: the test
+  // builds at codeReplicas=3, which SCALES and renames the code corpus,
+  // so index-mode results differ legitimately — their parity test below
+  // builds over the fixture files instead)
+
+  /** The build's phase names in order: Bench's build priors and stdout
+    * line and the perfbench harness key on them (the code phases are
+    * those after `code_files`).
+    */
+  private val phaseNames = Seq(
+    "postings", "copurchase_edges", "degrees", "edges_outdeg",
+    "oriented_edges", "triangle_counts", "winnow_fps", "winnow_pairs",
+    "neardup_pairs", "simhash_sigs", "doc_grams8", "source_grams8",
+    "doc_spans8", "gram8_novelty", "span8_rn", "source_gram8_kmv",
+    "ivf_centroids", "ivf_assigned", "code_files", "chunks", "call_edges",
+    "type_edges", "code_postings", "nl_describe", "resolved_calls",
+    "resolved_edges", "code_posting_norms", "hp_body_postings",
+    "hp_name_postings", "hp_doc_postings", "hp_dl", "hp_idf", "hp_parents",
+    "hp_meta", "sparse_encode")
+
+  test("buildPhases: the recorded phase names, in build order") {
+    assert(Indexes.buildPhases(spark, "", "", 0).map(_._1) == phaseNames)
+  }
+
+  test("code-family build phases over the fixture files serve the derived-mode rows") {
+    val consumers = Seq("q205_lexical_hotpath_e2e", "q206_negation_hotpath",
+      "q49_callgraph_tiers", "q63_health_report")
+    def rows(n: String) =
+      SparkEntry.queries(n)(spark, sf).collect().toSeq.sortBy(_.toString)
+    val derived = consumers.map(n => n -> rows(n)).toMap
+    val ixDir = java.nio.file.Files.createTempDirectory("graft_ix_code_parity").toString
+    graft.parser.CodeFixtures.filesDf(spark).write.parquet(s"$ixDir/code_files.parquet")
+    Indexes.buildPhases(spark, sf, ixDir, 0)
+      .dropWhile(_._1 != "code_files").drop(1).filterNot(_._1 == "sparse_encode")
+      .foreach { case (n, derive) => derive().write.parquet(s"$ixDir/$n.parquet") }
+    Indexes.setRoot(Some(ixDir))
+    try {
+      assert(Indexes.codeChunks(spark).inputFiles.exists(_.contains(ixDir)))
+      assert(Indexes.hpFtsIndex(spark).meta.inputFiles.exists(_.contains(ixDir)))
+      consumers.foreach { n =>
+        val indexed = rows(n)
+        assert(indexed == derived(n), s"$n differs between index and derived mode")
+        assert(indexed.nonEmpty, s"$n returned no rows")
+      }
+    } finally Indexes.setRoot(None)
+  }
 
   test("built-index mode is result-identical to derived mode") {
     val ixDir = java.nio.file.Files.createTempDirectory("graft_ix_test").toString
