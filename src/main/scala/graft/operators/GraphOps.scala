@@ -7,231 +7,148 @@ import org.apache.spark.sql.functions._
   * the Spark form of the reference's call/type-graph consumers
   * (callers/callees/trace/impact/dead/related, SURVEY §2.12).
   *
-  * BFS is an iterative frontier join with an accumulated visited set
-  * (/root/reference/src/impact/bfs.rs:49-110 re-expressed): each level
-  * is one shuffle on the join key. Scale notes baked in:
-  *  - depth cap AND node cap (the reference caps at 10k ancestors,
-  *    bfs.rs:11-14) bound runaway closures on hub-heavy graphs;
-  *  - each level is localCheckpoint'ed so the lineage doesn't grow
-  *    per iteration (a 10-level BFS would otherwise re-plan 10 nested
-  *    joins);
-  *  - hub skew is the known hazard — at 100 TB the edge table would be
-  *    pre-bucketed by src and heavy keys salted; AQE skew-join handles
-  *    moderate skew here.
+  * BFS is ONE iterative frontier join (`walk`, the reference's capped
+  * BFS at src/impact/bfs.rs:49-110; `trace`, bfs.rs:304-380, is the
+  * same walk with a path carried along). Each
+  * level is the frontier ⋈ edges join plus one aggregation that drops
+  * every node already visited, so levels are disjoint and a cycle
+  * never re-expands. The public entries (`bfs`, `bfsReverse`,
+  * `bfsLabeled`, `bfsPaths`) only choose the carried columns. The loop
+  * has two modes:
+  *  - shallow (maxDepth <= 3, no cap): one lazy plan, no cuts, no
+  *    counts — the lineage is only maxDepth joins deep, and every eager
+  *    action would be a Spark job whose scheduling dominates;
+  *  - deep or capped: the seed level and each later level are
+  *    lineage-cut AND counted in one job each (`stableCounted`), so the
+  *    union plan stays linear in depth and expansion stops on an empty
+  *    level, or after the level that passes the node cap (the
+  *    reference caps at 10k ancestors, bfs.rs:11-14, a hub-graph DoS
+  *    rail; at most one level of overshoot). When a LIMIT-bounded edge
+  *    probe proves the cap unreachable, the levels are only cut.
+  * The edge frame is re-read once per level, so it is cut once up
+  * front unless it is already a scan (`Materialize.unlessScan`).
+  * Hub skew is the known hazard — at 100 TB the edge table would be
+  * pre-bucketed by src and heavy keys salted; AQE skew-join handles
+  * moderate skew here.
   */
 object GraphOps {
 
   val DefaultMaxNodes = 10000L
 
+  /** Most edge rows the cap probe scans. */
+  private val ProbeLimit = 100000000L
+
   /** Multi-source BFS. Returns (node, depth) with depth = minimum hop
-    * distance from any seed (seeds at depth 0). Frontier expansion stops
-    * at maxDepth or when the visited set exceeds maxNodes.
+    * distance from any seed (seeds at depth 0). Expansion stops at
+    * maxDepth or after the level where the visited set exceeds maxNodes.
     *
     * @param edges directed edges; pass a symmetrized frame for
-    *              undirected semantics (or use `reverse` for ancestors).
+    *              undirected semantics (or use `bfsReverse` for ancestors).
     */
   def bfs(edges: DataFrame, seeds: DataFrame, maxDepth: Int,
-          maxNodes: Long = DefaultMaxNodes,
-          materializeEdges: Boolean = true): DataFrame = {
-    // multi-level BFS touches the edge frame once per level — if it is
-    // itself a derived join (co-purchase, collapsed-trust, ...),
-    // materialize it once instead of re-deriving per level; pass
-    // materializeEdges = false when the frame is already a table scan
-    // (prebuilt index) and the checkpoint would only copy it
-    val e0 = edges.select(col("src"), col("dst"))
-    val e = if (maxDepth > 1 && materializeEdges) e0.transform(graft.operators.Materialize.stable) else e0
-    // Shallow uncapped traversals (the oracle-gated closure queries)
-    // compose one lazy plan: per-level eager checkpoints and the
-    // count()/isEmpty() cap probes are each a separate Spark job whose
-    // scheduling overhead dominates at depth <= 3 — the lineage those
-    // checkpoints exist to cut is only maxDepth joins deep here.
-    val shallow = maxDepth <= 3 && maxNodes == Long.MaxValue
-    var visited = seeds.select(col("node")).distinct()
-      .withColumn("depth", lit(0))
-    var nodeCount = 0L
-    var uncapped = shallow
-    if (!shallow) {
-      val (v, n) = graft.operators.Materialize.stableCounted(visited)
-      visited = v
-      nodeCount = n
-      // cap-REACHABILITY gate (VERDICT r11 wrong #2): the closure can
-      // never hold more than |seeds| + |edge rows| nodes, so when that
-      // bound is already under the cap, the per-level count() jobs
-      // that IMPLEMENT the cap buy nothing — skip them (the per-level
-      // checkpoint stays: it keeps the union plan linear in depth).
-      // The probe is LIMIT-bounded: it scans at most maxNodes+1 edge
-      // rows (a corpus whose edge table exceeds the cap — where the
-      // eager rail must stay — quits the probe at the bound instead of
-      // counting the whole table). Depth bounds: at depth 1 the probe
-      // costs what it saves, and without counts there is no
-      // empty-frontier early exit, so the gate is kept to the report
-      // depths (2..6).
-      // a count that HIT the probe cap is a truncation, not a bound —
-      // treat saturation as gate failure (for maxNodes >= probeCap the
-      // saturated count could otherwise still pass <= maxNodes and
-      // wrongly disable the rail; cnt < probeCap is a no-op in the
-      // unsaturated probeCap = maxNodes + 1 case)
-      val probeCap = math.min(maxNodes + 1, 100000000L).toInt
-      val cnt = e.limit(probeCap).count()
-      uncapped = maxDepth > 1 && maxDepth <= 6 && maxNodes < Long.MaxValue &&
-        cnt < probeCap && nodeCount + cnt <= maxNodes
-    }
-    var frontier = visited
-    var d = 1
-    var lastAdded = 1L
-    while (d <= maxDepth && nodeCount <= maxNodes &&
-      (uncapped || lastAdded > 0)) {
-      // name-based join (frontier column renamed): in shallow mode the
-      // frontier's lineage CONTAINS e, so dataset-qualified refs like
-      // e("dst") would be ambiguous self-join references
-      var next = frontier.select(col("node").as("__fnode"))
-        .join(e, col("__fnode") === col("src"))
-        .select(col("dst").as("node")).distinct()
-        .join(visited.select(col("node")), Seq("node"), "left_anti")
-        .withColumn("depth", lit(d))
-      if (!shallow) {
-        // levels are DISJOINT by the left_anti, so the visited count is
-        // the running sum of frontier counts — and the count piggybacks
-        // on the checkpoint's materialization job (stableCounted: ONE
-        // job per level, not checkpoint + count), while the union of
-        // <=depth checkpointed leaves stays a small lazy plan that
-        // needs no second checkpoint per level
-        if (!uncapped) {
-          val (m, n) = graft.operators.Materialize.stableCounted(next)
-          next = m
-          lastAdded = n
-          nodeCount += lastAdded
-        } else next = next.transform(graft.operators.Materialize.stable)
-      }
-      visited = visited.unionByName(next)
-      frontier = next
-      d += 1
-    }
-    visited
-  }
-
-  /** BFS with shortest-path reconstruction — the `trace` operator
-    * (/root/reference/src/impact/bfs.rs:304-380 plus the path the
-    * min-hop closure alone loses). Each visited node carries ONE
-    * deterministic shortest path, encoded "seed->a->b": at every level
-    * the candidate paths through the (already-minimal) parent paths are
-    * reduced with MIN, so ties pick the lexicographically smallest
-    * path. Same shuffle shape as bfs (one join per level, lineage cut
-    * per level); the path column adds O(depth) bytes per row, bounded
-    * by maxDepth.
-    */
-  def bfsPaths(edges: DataFrame, seeds: DataFrame, maxDepth: Int,
-               maxNodes: Long = DefaultMaxNodes): DataFrame = {
-    val e0 = edges.select(col("src"), col("dst"))
-    val e = if (maxDepth > 1) e0.transform(graft.operators.Materialize.stable) else e0
-    val shallow = maxDepth <= 3 && maxNodes == Long.MaxValue // see bfs
-    var visited = seeds.select(col("node")).distinct()
-      .withColumn("depth", lit(0))
-      .withColumn("path", col("node").cast("string"))
-    if (!shallow) visited = visited.transform(graft.operators.Materialize.stable)
-    var frontier = visited
-    var d = 1
-    var nodeCount = if (shallow) 0L else visited.count()
-    while (d <= maxDepth && nodeCount <= maxNodes &&
-      (shallow || !frontier.isEmpty)) {
-      var next = frontier // name-based join: see bfs
-        .select(col("node").as("__fnode"), col("path").as("__fpath"))
-        .join(e, col("__fnode") === col("src"))
-        .select(col("dst").as("node"),
-          concat(col("__fpath"), lit("->"), col("dst").cast("string")).as("path"))
-        .groupBy(col("node"))
-        .agg(min(col("path")).as("path"))
-        .join(visited.select(col("node")), Seq("node"), "left_anti")
-        .withColumn("depth", lit(d))
-        .select(col("node"), col("depth"), col("path"))
-      if (!shallow) next = next.transform(graft.operators.Materialize.stable)
-      visited = visited.unionByName(next)
-      if (!shallow) visited = visited.transform(graft.operators.Materialize.stable)
-      frontier = next
-      if (!shallow) nodeCount = visited.count()
-      d += 1
-    }
-    visited
-  }
-
-  /** Per-seed labeled BFS: seeds carry a `seed` label alongside the
-    * start `node`, and every reached pair keeps the seed it was
-    * reached FROM — the shape of "tests covering each of these
-    * functions" closures where reachability must stay attributable.
-    * Returns distinct (seed, node, depth) with the seeds at depth 0.
-    * Same discipline as bfs: per-pair visited subtraction (a cycle
-    * can never re-expand an already-reached pair — the r10 verdict
-    * watch item on the hand-rolled depth-5 report closures), per-level
-    * lineage cuts, and a PAIR-count cap as the hub-graph DoS rail.
-    */
-  def bfsLabeled(edges: DataFrame, seeds: DataFrame, maxDepth: Int,
-                 maxNodes: Long = DefaultMaxNodes,
-                 materializeEdges: Boolean = true): DataFrame = {
-    val e0 = edges.select(col("src"), col("dst"))
-    val e = if (maxDepth > 1 && materializeEdges)
-      e0.transform(graft.operators.Materialize.stable) else e0
-    val shallow = maxDepth <= 3 && maxNodes == Long.MaxValue // see bfs
-    var visited = seeds.select(col("seed"), col("node")).distinct()
-      .withColumn("depth", lit(0))
-    var pairCount = 0L
-    var uncapped = shallow
-    if (!shallow) {
-      val (v, n) = graft.operators.Materialize.stableCounted(visited)
-      visited = v
-      pairCount = n
-      // cap-reachability gate (see bfs): reached pairs can never
-      // exceed |seed pairs| × (1 + edge rows) — overflow-guarded; a
-      // bound provably under the cap drops the per-level count() jobs
-      // while the per-level checkpoints keep the union plan linear.
-      // LIMIT-bounded probe, gate kept to the report depths (see bfs).
-      if (maxDepth > 1 && maxDepth <= 6 && maxNodes < Long.MaxValue &&
-          pairCount > 0 && maxNodes / pairCount >= 1) {
-        val probeCap = math.min(maxNodes / pairCount + 1, 100000000L).toInt
-        val er = e.limit(probeCap).count()
-        // er == probeCap means the probe truncated — the true edge count
-        // is unknown, so the rail must stay on (see bfs)
-        uncapped = er < probeCap && pairCount <= maxNodes / (er + 1)
-      }
-    }
-    var frontier = visited
-    var d = 1
-    var lastAdded = 1L
-    while (d <= maxDepth && pairCount <= maxNodes &&
-      (uncapped || lastAdded > 0)) {
-      var next = frontier // name-based join: see bfs
-        .select(col("seed"), col("node").as("__fnode"))
-        .join(e, col("__fnode") === col("src"))
-        .select(col("seed"), col("dst").as("node")).distinct()
-        .join(visited.select(col("seed"), col("node")),
-          Seq("seed", "node"), "left_anti")
-        .withColumn("depth", lit(d))
-      if (!shallow) { // disjoint levels: running sum, one job per
-        if (!uncapped) { // level via stableCounted (see bfs)
-          val (m, n) = graft.operators.Materialize.stableCounted(next)
-          next = m
-          lastAdded = n
-          pairCount += lastAdded
-        } else next = next.transform(graft.operators.Materialize.stable)
-      }
-      visited = visited.unionByName(next)
-      frontier = next
-      d += 1
-    }
-    visited
-  }
+          maxNodes: Long = DefaultMaxNodes): DataFrame =
+    walk(edges, seeds, Nil, path = false, maxDepth, maxNodes)
 
   /** Reverse-direction BFS (ancestors — the `impact` direction). */
   def bfsReverse(edges: DataFrame, seeds: DataFrame, maxDepth: Int,
-                 maxNodes: Long = DefaultMaxNodes,
-                 materializeEdges: Boolean = true): DataFrame =
+                 maxNodes: Long = DefaultMaxNodes): DataFrame =
     bfs(edges.select(col("dst").as("src"), col("src").as("dst")),
-      seeds, maxDepth, maxNodes, materializeEdges)
+      seeds, maxDepth, maxNodes)
 
-  /** 1-hop neighbors with edge multiplicity (callers/callees shape). */
-  def neighbors(edges: DataFrame, seeds: DataFrame): DataFrame =
-    edges.join(broadcast(seeds), edges("src") === seeds("node"))
-      .groupBy(col("src"), col("dst"))
-      .agg(count(lit(1)).as("n_edges"))
+  /** BFS with shortest-path reconstruction — the `trace` operator.
+    * Returns (node, depth, path): each visited node carries ONE
+    * deterministic shortest path, encoded "seed->a->b" (ties pick the
+    * lexicographically smallest path).
+    */
+  def bfsPaths(edges: DataFrame, seeds: DataFrame, maxDepth: Int,
+               maxNodes: Long = DefaultMaxNodes): DataFrame =
+    walk(edges, seeds, Nil, path = true, maxDepth, maxNodes)
+
+  /** Per-seed labeled BFS: seeds carry a `seed` label alongside the
+    * start `node`, and every reached pair keeps the seed it was reached
+    * FROM — the shape of "tests covering each of these functions"
+    * closures where reachability must stay attributable. Returns
+    * distinct (seed, node, depth) with the seeds at depth 0; the cap
+    * counts (seed, node) pairs.
+    */
+  def bfsLabeled(edges: DataFrame, seeds: DataFrame, maxDepth: Int,
+                 maxNodes: Long = DefaultMaxNodes): DataFrame =
+    walk(edges, seeds, Seq("seed"), path = false, maxDepth, maxNodes)
+
+  /** The frontier loop (modes: see the object doc). A node is visited
+    * once per `labels` tuple; with `path`, each reached (labels, node)
+    * keeps the MIN of its candidate "parent->node" paths, the parents'
+    * paths being minimal already.
+    */
+  private def walk(edges: DataFrame, seeds: DataFrame, labels: Seq[String],
+                   path: Boolean, maxDepth: Int, maxNodes: Long): DataFrame = {
+    val key = labels :+ "node"
+    val keyCols = key.map(col)
+    val carried = labels.map(col)
+    def ifPath(c: => Column): Seq[Column] = if (path) Seq(c) else Nil
+    val e0 = edges.select(col("src"), col("dst"))
+    val e = if (maxDepth > 1) Materialize.unlessScan(e0) else e0
+    var visited = seeds.select(keyCols: _*).distinct()
+      .select(keyCols ++ Seq(lit(0).as("depth")) ++ ifPath(col("node").cast("string").as("path")): _*)
+    val shallow = maxDepth <= 3 && maxNodes == Long.MaxValue
+    var counted = !shallow
+    var nodeCount = 0L
+    if (!shallow) {
+      val (v, n) = Materialize.stableCounted(visited)
+      visited = v
+      nodeCount = n
+      // cap-reachability gate: each expansion adds at most L·|edges|
+      // nodes in total (L = 1 unlabeled, L = |seed pairs| labeled), so
+      // n + L·E <= maxNodes proves the cap unreachable and the per-level
+      // counts that implement it buy nothing. The probe reads at most
+      // probeCap edge rows; reading probeCap of them means the bound
+      // fails (or the probe saturated), so the rail stays. The gate is
+      // kept to the report depths: at depth 1 the probe costs what it
+      // saves, and past 6 losing the empty-level exit costs more.
+      val perEdge = if (labels.isEmpty) 1L else n
+      if (maxNodes < Long.MaxValue && maxDepth > 1 && maxDepth <= 6 &&
+          perEdge > 0 && n <= maxNodes) {
+        val probeCap = math.min((maxNodes - n) / perEdge + 1, ProbeLimit)
+        counted = e.limit(probeCap.toInt).count() == probeCap
+      }
+    }
+    var frontier = visited
+    var lastAdded = 1L
+    var d = 1
+    while (d <= maxDepth && nodeCount <= maxNodes && lastAdded > 0) {
+      // name-based join (frontier columns renamed): in shallow mode the
+      // frontier's lineage CONTAINS e, so dataset-qualified refs like
+      // e("dst") would be ambiguous self-join references
+      val hop = frontier
+        .select(carried ++ Seq(col("node").as("__fnode")) ++ ifPath(col("path").as("__fpath")): _*)
+        .join(e, col("__fnode") === col("src"))
+      // this level's candidates and everything visited meet in ONE
+      // aggregation per (labels, node), which both de-duplicates the
+      // candidates and drops the visited ones (one shuffle where a
+      // distinct plus a left_anti join take two)
+      val cand = hop.select(carried ++ Seq(col("dst").as("node"), lit(false).as("__seen")) ++
+        ifPath(concat(col("__fpath"), lit("->"), col("dst").cast("string")).as("path")): _*)
+      val seen = visited.select(keyCols ++ Seq(lit(true).as("__seen")) ++
+        ifPath(lit(null).cast("string").as("path")): _*)
+      var next = cand.unionByName(seen)
+        .groupBy(keyCols: _*)
+        .agg(max(col("__seen")).as("__seen"), ifPath(min(col("path")).as("path")): _*)
+        .filter(!col("__seen"))
+        .select(keyCols ++ Seq(lit(d).as("depth")) ++ ifPath(col("path")): _*)
+      if (counted) {
+        // levels are disjoint, so the visited count is the running sum
+        // of level counts, and the count rides on the cut's own job
+        val (m, n) = Materialize.stableCounted(next)
+        next = m
+        lastAdded = n
+        nodeCount += n
+      } else if (!shallow) next = Materialize.stable(next)
+      visited = visited.unionByName(next)
+      frontier = next
+      d += 1
+    }
+    visited
+  }
 
   /** Collapse parallel edges of different kinds to the single most
     * trusted one per (src, dst), by an explicit rank map — never a
@@ -260,13 +177,9 @@ object GraphOps {
     * replicated — deterministic salts, result row-identical to the
     * unsalted join (pinned in GraphOpsSpec).
     */
-  def related(edges: DataFrame, seeds: DataFrame,
-              numSalts: Int = 8,
-              materializeEdges: Boolean = true): DataFrame = {
-    // both join sides derive from `edges`; if it is itself a derived
-    // join (co-purchase), materialize once instead of twice — skip when
-    // it is already a table scan (prebuilt index)
-    val e = if (materializeEdges) edges.transform(graft.operators.Materialize.stable) else edges
+  def related(edges: DataFrame, seeds: DataFrame, numSalts: Int = 8): DataFrame = {
+    // both join sides read `edges`: a derived frame is cut once
+    val e = Materialize.unlessScan(edges)
     val a = e.join(broadcast(seeds), e("src") === seeds("node"))
       .select(col("src").as("seed"), col("dst").as("shared"))
     val b = e.select(col("src").as("other"), col("dst").as("shared"))
@@ -276,7 +189,30 @@ object GraphOps {
       .agg(countDistinct(col("shared")).as("n_shared"))
   }
 
-  /** Damped PageRank in exact integer micro-units — the global
+  /** Nodes below which the per-round rank join broadcasts the rank
+    * vector (a |nodes|-row, 16-byte-row frame — 5M nodes ≈ 80 MB).
+    * Above it the hint is withheld so the planner uses a shuffled
+    * hash/SMJ join: an explicit broadcast() is ALWAYS honored
+    * regardless of size, so an unconditional hint on a billion-node
+    * graph would collect the full rank vector to the driver every
+    * round and fail at the 8 GB broadcast limit — there is no
+    * "graceful degradation" out of an explicit hint.
+    */
+  val PageRankBroadcastNodeCap = 5000000L
+
+  /** Degree-joined edge frame (src, dst, outdeg) — the per-round join
+    * input PageRank re-reads every iteration. The index build persists
+    * it once (the `edges_outdeg` artifact) instead of paying the degree
+    * aggregation + join per run.
+    */
+  def degreeJoinedEdges(edges: DataFrame): DataFrame = {
+    val e = edges.select(col("src"), col("dst"))
+    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
+    e.join(outdeg, "src").select(col("src"), col("dst"), col("outdeg"))
+  }
+
+  /** Damped PageRank in exact integer micro-units over a degree-joined
+    * (src, dst, outdeg) frame (see degreeJoinedEdges) — the global
     * importance ranking (hotspot analysis generalized past q43's
     * in-degree counting: a caller's own importance propagates).
     *
@@ -291,46 +227,10 @@ object GraphOps {
     * node has outdeg ≥ 1 (a symmetric graph guarantees it); dangling
     * redistribution is deliberately out of scope and documented.
     *
-    * Scale: each round is one (edges ⋈ pr) shuffle on src + one dst
+    * Scale: each round is one (edges ⋈ pr) join on src + one dst
     * aggregation — the canonical distributed PageRank; pr stays
-    * |nodes|-sized, and pre-partitioning both sides on the join key
-    * (or bucketing the edge table) removes the per-round exchange.
-    */
-  /** Nodes below which the per-round rank join broadcasts the rank
-    * vector (a |nodes|-row, 16-byte-row frame — 5M nodes ≈ 80 MB).
-    * Above it the hint is withheld so the planner uses a shuffled
-    * hash/SMJ join: an explicit broadcast() is ALWAYS honored
-    * regardless of size, so an unconditional hint on a billion-node
-    * graph would collect the full rank vector to the driver every
-    * round and fail at the 8 GB broadcast limit — there is no
-    * "graceful degradation" out of an explicit hint.
-    */
-  val PageRankBroadcastNodeCap = 5000000L
-
-  /** Degree-joined edge frame (src, dst, outdeg) — the per-round join
-    * input pageRank re-reads every iteration. Exposed so an index build
-    * can persist it once (the `resolved_edges` pattern) instead of
-    * paying the degree aggregation + join per run.
-    */
-  def degreeJoinedEdges(edges: DataFrame): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    e.join(outdeg, "src").select(col("src"), col("dst"), col("outdeg"))
-  }
-
-  def pageRank(edges: DataFrame, iters: Int = 3,
-               materializeEdges: Boolean = true): DataFrame = {
-    val e0 = edges.select(col("src"), col("dst"))
-    val e = if (materializeEdges) e0.transform(Materialize.stable) else e0
-    pageRankFromDegreeJoined(
-      degreeJoinedEdges(e).transform(Materialize.stable), iters)
-  }
-
-  /** PageRank over an ALREADY degree-joined (src, dst, outdeg) frame —
-    * the prebuilt-index entry point: callers that persisted
-    * `degreeJoinedEdges` (see Indexes.build) skip the per-run degree
-    * aggregation + join entirely. `withDeg` must be cheap to rescan
-    * (a table scan or a materialized frame): it is read once per round.
+    * |nodes|-sized. `withDeg` must be cheap to rescan (a table scan or
+    * a materialized frame): it is read once per round.
     */
   def pageRankFromDegreeJoined(withDeg: DataFrame, iters: Int = 3): DataFrame = {
     // materialize the init frame BEFORE counting (the q169 LPA order):
@@ -370,51 +270,19 @@ object GraphOps {
     pr
   }
 
-  /** Per-node triangle counts via the DEGREE-ORDERED wedge join — the
-    * distributed triangle algorithm (Suri & Vassilvitskii's MapReduce
-    * formulation): orient every undirected edge from its lower-rank to
-    * higher-rank endpoint under the total order (degree, node), build
-    * wedges by self-joining oriented edges on their source, and close
-    * each wedge against the oriented edge set. Orientation bounds each
-    * node's out-degree by O(√m) on any graph, so the wedge join never
-    * explodes on hub nodes — the property that makes this the 100 TB
-    * shape where a naive neighborhood-intersection melts on skew.
-    *
-    * Input: symmetric or one-directional (src, dst) pairs; output:
-    * (node, n_tri) for every node in ≥1 triangle. Each triangle
-    * contributes once to each of its three corners.
+  /** Degree-orientation of an edge set KNOWN symmetric and row-distinct
+    * (both orientations present exactly once — the persisted co-purchase
+    * artifact's contract), the per-run-invariant half of the triangle
+    * count that the index build persists (`oriented_edges`): per-node
+    * degrees, each undirected edge emitted lower→higher under the
+    * (degree, node) total order as (a, b, db) with db = b's degree. The
+    * undirected dedup reduces to a src < dst filter (no distinct: the
+    * data is already unique). No materialization: the filter re-scans
+    * cost less than a checkpoint copy when the input is a table scan.
     */
-  def triangleCounts(edges: DataFrame): DataFrame =
-    triangleCountsFromOriented(
-      orientEdges(edges).transform(Materialize.stable))
-
-  /** Degree-orientation of an edge set: undirected-dedup, per-node
-    * degrees, each edge emitted lower→higher under the (degree, node)
-    * total order as (a, b, db) with db = b's degree. This is the
-    * expensive, per-run-invariant half of triangleCounts — exposed so
-    * the index build can persist it (q153 then pays only the wedge
-    * join + close per run).
-    */
-  def orientEdges(edges: DataFrame): DataFrame =
-    orientFromUnd(edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("x"),
-        greatest(col("src"), col("dst")).as("y"))
-      .distinct()
-      .transform(Materialize.stable))
-
-  /** orientEdges over an input KNOWN symmetric and row-distinct (both
-    * orientations present exactly once — the persisted co-purchase
-    * artifact's contract): the undirected dedup reduces to a src < dst
-    * filter, dropping the distinct's full-table shuffle (guide §2.4 — a
-    * distinct on data that is already unique). No materialization: the
-    * filter re-scans cost less than a checkpoint copy when the input is
-    * a table scan.
-    */
-  def orientEdgesFromSymmetric(edges: DataFrame): DataFrame =
-    orientFromUnd(edges.filter(col("src") < col("dst"))
-      .select(col("src").as("x"), col("dst").as("y")))
-
-  private def orientFromUnd(und: DataFrame): DataFrame = {
+  def orientEdgesFromSymmetric(edges: DataFrame): DataFrame = {
+    val und = edges.filter(col("src") < col("dst"))
+      .select(col("src").as("x"), col("dst").as("y"))
     val deg = und.select(col("x").as("node"))
       .unionByName(und.select(col("y").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("d"))
@@ -434,8 +302,17 @@ object GraphOps {
       .select(col("a"), col("bkey.n").as("b"), col("bkey.d").as("db"))
   }
 
-  /** Wedge-join + close over an already-oriented (a, b, db) edge frame
-    * (see orientEdges). `oriented` is scanned three times — pass a
+  /** Per-node triangle counts via the DEGREE-ORDERED wedge join — the
+    * distributed triangle algorithm (Suri & Vassilvitskii's MapReduce
+    * formulation) over an already-oriented (a, b, db) edge frame (see
+    * orientEdgesFromSymmetric): build wedges by self-joining oriented
+    * edges on their source, and close each wedge against the oriented
+    * edge set. Orientation bounds each node's out-degree by O(√m) on
+    * any graph, so the wedge join never explodes on hub nodes — the
+    * property that makes this the 100 TB shape where a naive
+    * neighborhood-intersection melts on skew. Output: (node, n_tri) for
+    * every node in ≥1 triangle; each triangle counts once at each of
+    * its three corners. `oriented` is scanned three times — pass a
     * table scan or a materialized frame.
     */
   def triangleCountsFromOriented(oriented: DataFrame): DataFrame = {

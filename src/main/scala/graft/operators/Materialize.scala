@@ -1,6 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project, SubqueryAlias}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 
 /** Lineage-cut materialization with a cluster-grade fallback.
   *
@@ -48,6 +52,27 @@ object Materialize {
     track(out)
   }
 
+  /** Cut lineage unless the frame already reads stored rows: below its
+    * projections and filters, the analyzed plan is a file or cached
+    * relation, a checkpoint or a local relation, which a re-scan costs
+    * no more than a copy would. An operator that reads an input several
+    * times (a BFS level per hop, both sides of a self-join) cuts it
+    * through here, so a derived input is computed once and a prebuilt
+    * table is never copied.
+    */
+  def unlessScan(df: DataFrame): DataFrame = {
+    @annotation.tailrec
+    def scan(p: LogicalPlan): Boolean = p match {
+      case Project(_, child) => scan(child)
+      case Filter(_, child) => scan(child)
+      case SubqueryAlias(_, child) => scan(child)
+      case l: LogicalRDD => l.rdd.isCheckpointed
+      case _: LogicalRelation | _: InMemoryRelation | _: LocalRelation => true
+      case _ => false
+    }
+    if (scan(df.queryExecution.analyzed)) df else stable(df)
+  }
+
   /** Cut lineage AND count in ONE Spark job: the checkpoint is marked
     * lazily and the count() action materializes it, so an iterative
     * operator that needs both (the capped BFS levels: materialize the
@@ -71,7 +96,7 @@ object Materialize {
     val q = live.computeIfAbsent(Thread.currentThread().getId,
       _ => new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]())
     out.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD => q.add(l.rdd)
+      case l: LogicalRDD => q.add(l.rdd)
       case _ =>
     }
     out

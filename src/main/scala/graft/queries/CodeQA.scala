@@ -638,19 +638,17 @@ private[queries] trait CodeQA { self: CodeQB with CodeQC =>
       // (the shallow-mode union plan repeats its seed subtree per
       // level) — cut it so the posting aggregation runs once
       .transform(graft.operators.Materialize.stable)
-    // one lineage cut shared by BOTH traversals (bfs would otherwise
-    // checkpoint its edge frame per call — same derivation, twice)
-    val edges = graft.operators.Materialize.stable(resolvedEdges(s))
+    // a derived edge frame is cut once for BOTH traversals (each bfs
+    // would otherwise cut its own copy); the prebuilt one is a scan
+    val edges = graft.operators.Materialize.unlessScan(resolvedEdges(s))
     // callee depth 3 = the reference's DEFAULT_ONBOARD_DEPTH
     // (onboard.rs:26); caller/test side stays the shallower context hop
     val fwd = GraphOps.bfs(
       edges.select(col("caller").as("src"), col("callee").as("dst")),
-      entry, maxDepth = 3, maxNodes = Long.MaxValue,
-      materializeEdges = false)
+      entry, maxDepth = 3, maxNodes = Long.MaxValue)
     val rev = GraphOps.bfs(
       edges.select(col("callee").as("src"), col("caller").as("dst")),
-      entry, maxDepth = 2, maxNodes = Long.MaxValue,
-      materializeEdges = false)
+      entry, maxDepth = 2, maxNodes = Long.MaxValue)
     val tagged = fwd.filter(col("depth") === 0)
       .select(col("node"), col("depth"), lit(0).as("krank"), lit("entry").as("kind"))
       .unionByName(fwd.filter(col("depth") > 0)
@@ -779,8 +777,7 @@ private[queries] trait CodeQA { self: CodeQB with CodeQC =>
     val tests = GraphOps.bfsLabeled(
         edges.select(col("callee").as("src"), col("caller").as("dst")),
         seeds.select(col("name").as("seed"), col("name").as("node")),
-        maxDepth = 2, maxNodes = Long.MaxValue,
-        materializeEdges = false) // store artifact, already a table scan
+        maxDepth = 2, maxNodes = Long.MaxValue)
       .filter(col("depth") >= 1)
       .filter(col("node").startsWith("test_"))
       .groupBy(col("seed")).agg(countDistinct(col("node")).as("n_tests"))

@@ -71,25 +71,18 @@ private[queries] trait CodeQB { self: CodeQA with CodeQC =>
     val callerCounts = realM.groupBy(col("callee").as("name"))
       .agg(countDistinct(col("caller")).as("n_callers"))
     // test reachability: forward BFS from each test's direct callees,
-    // attributed per test, depth-capped — one lazy plan
-    // step relation carries disjoint column names so the iterated
-    // self-join resolves by name (no ambiguous-lineage attributes);
-    // the edge set and each BFS level are materialized once — a depth-5
-    // lazy chain would otherwise re-execute every prior level (and the
-    // fnNames join) inside each level's subtree
-    val step = realM.select(col("caller").as("step_src"),
-      col("callee").as("step_dst"))
-    var frontier = realM.filter(col("caller").startsWith("test_"))
-      .select(col("caller").as("test"), col("callee").as("node")).distinct()
-    var reach = frontier
-    for (_ <- 2 to TestReachDepth) {
-      frontier = graft.operators.Materialize.stable(
-        frontier.join(step, col("node") === col("step_src"))
-          .select(col("test"), col("step_dst").as("node")).distinct())
-      reach = reach.unionByName(frontier).distinct()
-    }
+    // attributed per test, through the shared labeled BFS. The level-1
+    // (test, callee) pairs are its seeds, so walks of 1..TestReachDepth
+    // hops are depths 0..TestReachDepth-1, and the reached pair set is
+    // the union of those walks' pairs. Uncapped: the oracle is. The
+    // pairs are distinct, so a row count per node counts its tests.
+    val reach = GraphOps.bfsLabeled(
+      realM.select(col("caller").as("src"), col("callee").as("dst")),
+      realM.filter(col("caller").startsWith("test_"))
+        .select(col("caller").as("seed"), col("callee").as("node")),
+      maxDepth = TestReachDepth - 1, maxNodes = Long.MaxValue)
     val testCounts = reach.groupBy(col("node").as("name"))
-      .agg(countDistinct(col("test")).as("n_tests"))
+      .agg(count(lit(1)).as("n_tests"))
     val risk = fnNames
       .join(callerCounts, Seq("name"), "left")
       .join(testCounts, Seq("name"), "left")

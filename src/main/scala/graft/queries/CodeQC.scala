@@ -454,7 +454,7 @@ private[queries] trait CodeQC { self: CodeQA with CodeQB =>
     *
     * Scale: hints/notes/type-deps are per-key aggregates over the
     * prebuilt edge tables; the only iterated stage is the depth-5
-    * reverse expansion, one lazy plan like the q22 shallow closure.
+    * test closure, the shared capped BFS (one cut per level).
     */
   def q100(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -466,31 +466,29 @@ private[queries] trait CodeQC { self: CodeQA with CodeQB =>
     // computing all-pairs ancestry — the frontier is |tests| × reach,
     // not |functions| × reach (the same asymmetry the reference
     // exploits by intersecting reverse_bfs with the test-chunk list).
-    // One lazy plan; per-level distinct bounds cycles.
     // The resolved-distinct pair frame is the persisted resolved_edges
     // store artifact (unresolved callees — a class name, say — never
     // become closure nodes; the oracle's edges CTE resolves the same
-    // way); it appears in every unrolled BFS level of the union plan
-    // below (4+ subtree copies), so it is still lineage-cut once
-    // (GraphOps.bfs's discipline) to keep the derived-mode plan sane.
-    val fwd = Indexes.resolvedCallEdges(s)
-      .transform(graft.operators.Materialize.stable)
+    // way); the caller counts, the test seeds and every BFS level read
+    // it, so a derived frame is lineage-cut once (a prebuilt one is
+    // already a scan).
+    val fwd = graft.operators.Materialize.unlessScan(Indexes.resolvedCallEdges(s))
     // caller_count is COUNT(DISTINCT caller), which is invariant under
-    // pair-dedup — compute it from the already-materialized fwd frame
-    // instead of a second scan+semijoin of the raw edge table
+    // pair-dedup — compute it from the fwd frame instead of a second
+    // scan+semijoin of the raw edge table
     val callerCnt = fwd.groupBy(col("callee").as("name"))
       .agg(countDistinct(col("caller")).as("caller_count"))
     // per-test depth-5 forward closure through the shared labeled BFS
-    // (visited-set + pair rail; fwd is already materialized above, so
-    // the operator is told not to re-checkpoint it). Seeding each test
-    // at depth 0 makes depth 1 exactly the old level-1 pair set; the
-    // (t, t) depth-0 pairs were already filtered by =!= below.
+    // (visited-set + pair rail; fwd is a scan or a cut already, so the
+    // operator reads it as it is). Seeding each test at depth 0 makes
+    // depth 1 exactly the old level-1 pair set; the (t, t) depth-0
+    // pairs were already filtered by =!= below.
     val tseeds = fwd.filter(col("caller").startsWith("test_"))
       .select(col("caller").as("seed")).distinct()
       .withColumn("node", col("seed"))
     val treached = graft.operators.GraphOps.bfsLabeled(
         fwd.select(col("caller").as("src"), col("callee").as("dst")),
-        tseeds, maxDepth = 5, materializeEdges = false)
+        tseeds, maxDepth = 5)
       .filter(col("depth") >= 1)
     val testCnt = treached
       .select(col("seed").as("t"), col("node"))

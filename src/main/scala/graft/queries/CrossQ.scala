@@ -54,8 +54,7 @@ object CrossQ {
     val rev = sites.select(col("callee").as("src"), col("caller").as("dst"))
       .distinct()
     val closure = GraphOps.bfs(rev, Seq("log_event").toDF("node"),
-      maxDepth = 3, maxNodes = Long.MaxValue,
-      materializeEdges = Indexes.activeRoot.isEmpty)
+      maxDepth = 3, maxNodes = Long.MaxValue)
     val v = closure.select(col("node").as("vn"), col("depth").as("vd"))
     val p = closure.select(col("node").as("pn"), col("depth").as("pd"))
     val cand = sites.join(v, sites("caller") === col("vn"))

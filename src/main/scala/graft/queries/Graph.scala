@@ -72,8 +72,7 @@ object Graph {
     // scale factor where the 1-hop closure exceeds the cap. The capped
     // form (the production default) is exercised in GraphOpsSpec.
     GraphOps.bfs(coPurchaseEdges(s, dir), seeds, maxDepth = 2,
-      maxNodes = Long.MaxValue,
-      materializeEdges = Indexes.activeRoot.isEmpty)
+      maxNodes = Long.MaxValue)
   }
 
   val q22Sql: String =
@@ -94,8 +93,7 @@ object Graph {
   def q23(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val seeds = Seq(1L).toDF("node")
-    val rel = GraphOps.related(coPurchaseEdges(s, dir), seeds,
-      materializeEdges = Indexes.activeRoot.isEmpty)
+    val rel = GraphOps.related(coPurchaseEdges(s, dir), seeds)
     TopK.perGroup(rel, Seq(col("seed")), col("n_shared"), col("other"), 20)
   }
 
@@ -170,8 +168,7 @@ object Graph {
     import s.implicits._
     // uncapped to match the uncapped SQL oracle — see q22
     val closure = GraphOps.bfs(coPurchaseEdges(s, dir), Seq(1L).toDF("node"),
-      maxDepth = 2, maxNodes = Long.MaxValue,
-      materializeEdges = Indexes.activeRoot.isEmpty)
+      maxDepth = 2, maxNodes = Long.MaxValue)
     val li = Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_partkey"))
     val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
     val reach = closure.join(li, closure("node") === li("l_partkey"))
@@ -233,12 +230,12 @@ object Graph {
        |WHERE d.in_degree >= t.thr""".stripMargin
 
   /** q134 — damped PageRank over the co-purchase graph, 3 exact
-    * integer-micro-unit rounds (GraphOps.pageRank), top-20 by final
-    * rank — global importance where q43's hotspot counting sees only
-    * in-degree: an important caller's weight propagates to what it
-    * calls. The symmetric co-purchase graph guarantees outdeg ≥ 1
-    * everywhere, so no dangling mass exists by construction (the
-    * operator's documented precondition).
+    * integer-micro-unit rounds (GraphOps.pageRankFromDegreeJoined),
+    * top-20 by final rank — global importance where q43's hotspot
+    * counting sees only in-degree: an important caller's weight
+    * propagates to what it calls. The symmetric co-purchase graph
+    * guarantees outdeg ≥ 1 everywhere, so no dangling mass exists by
+    * construction (the operator's documented precondition).
     */
   def q134(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -279,10 +276,11 @@ object Graph {
   /** q153 — per-node triangle counts over the co-purchase graph, top 50:
     * the local-clustering numerator ("how interconnected is this
     * product's neighborhood"), computed with the degree-ordered wedge
-    * join (GraphOps.triangleCounts — oriented out-degrees are O(√m),
-    * so hub products cannot explode the join). The oracle counts the
-    * same triangles orientation-free (u<v canonical edges, a 3-way
-    * join), proving the oriented plan loses nothing.
+    * join (GraphOps.triangleCountsFromOriented over the prebuilt
+    * oriented edges — oriented out-degrees are O(√m), so hub products
+    * cannot explode the join). The oracle counts the same triangles
+    * orientation-free (u<v canonical edges, a 3-way join), proving the
+    * oriented plan loses nothing.
     */
   def q153(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -329,11 +327,10 @@ object Graph {
     */
   def q169(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // prebuilt edges are a parquet scan — re-checkpointing 2.4M rows
-    // per run is pure cost (the q134 materializeEdges discipline)
-    val e0 = Indexes.coPurchaseEdges(s, dir)
-    val e = if (Indexes.activeRoot.isEmpty)
-      e0.transform(graft.operators.Materialize.stable) else e0
+    // read once per round: cut the derived edge set once; prebuilt
+    // edges are a parquet scan, and re-checkpointing 2.4M rows per run
+    // is pure cost
+    val e = graft.operators.Materialize.unlessScan(Indexes.coPurchaseEdges(s, dir))
     var labels = e.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
       .transform(graft.operators.Materialize.stable)
@@ -396,9 +393,7 @@ object Graph {
     * rounds keep the oracle expressible.
     */
   def q180(s: SparkSession, dir: String): DataFrame = {
-    val e0 = Indexes.coPurchaseEdges(s, dir)
-    val e = if (Indexes.activeRoot.isEmpty)
-      e0.transform(graft.operators.Materialize.stable) else e0
+    val e = graft.operators.Materialize.unlessScan(Indexes.coPurchaseEdges(s, dir))
     val deg0 = e.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg_full"))
       .transform(graft.operators.Materialize.stable)

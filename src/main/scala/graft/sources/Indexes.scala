@@ -94,8 +94,7 @@ object Indexes {
     def documents: DataFrame = Tables.documents(s, dir)
     /** The hot-path FTS index over the chunk input, built once for the
       * hp_* phases that project it (built per phase, it cost each phase
-      * about 0.1 s of plan analysis and a schema-inference job for its
-      * own `chunks` read).
+      * about 0.1 s of plan analysis).
       */
     lazy val hp: FtsIndex = hpIndex(read("chunks"))
   }
@@ -443,8 +442,12 @@ object Indexes {
     */
   def buildPhases(s: SparkSession, dir: String, out: String,
                   codeReplicas: Int): Seq[(String, () => DataFrame)] = {
+    // one read per input artifact per call (each read is a Parquet
+    // schema-inference job, and `chunks` alone feeds six phases): within
+    // one call every artifact is written once, before any phase reads it
+    val reads = scala.collection.concurrent.TrieMap[String, DataFrame]()
     val in = new Inputs(s, dir, Some(codeReplicas),
-      n => s.read.parquet(s"$out/$n.parquet"))
+      n => reads.getOrElseUpdate(n, s.read.parquet(s"$out/$n.parquet")))
     artifacts.map(a => a.name -> (() => a.derive(in)))
   }
 

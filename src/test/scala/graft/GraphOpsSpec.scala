@@ -13,6 +13,7 @@ class GraphOpsSpec extends SparkTestBase {
 
   test("cap-reachability gate: an under-cap closure matches the eager " +
     "rail row-for-row (bfs and bfsLabeled)") {
+    // (bfsPaths runs the same loop and is pinned here too)
     // |seeds| + |edges| = 6 <= the default cap, so the gate drops the
     // per-level count jobs; forcing the eager rail with a tight (but
     // non-truncating) cap must give the identical closure
@@ -26,6 +27,12 @@ class GraphOpsSpec extends SparkTestBase {
     // the last level, so nothing is truncated
     val eager = rows(GraphOps.bfs(chain5, s1, maxDepth = 5, maxNodes = 5L))
     assert(gated == eager && gated.size == 6)
+    def paths(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
+    val pgated = paths(GraphOps.bfsPaths(chain5, s1, maxDepth = 5))
+    val peager = paths(GraphOps.bfsPaths(chain5, s1, maxDepth = 5, maxNodes = 5L))
+    assert(pgated == peager && pgated.size == 6)
+    assert(pgated.contains((6L, 5, "1->2->3->4->5->6")))
     val seeds2 = Seq((1L, 1L), (8L, 8L)).toDF("seed", "node")
     val lchain = Seq((1L, 2L), (2L, 3L), (8L, 2L)).toDF("src", "dst")
     def pairs(df: org.apache.spark.sql.DataFrame) =
@@ -51,6 +58,91 @@ class GraphOpsSpec extends SparkTestBase {
     assert(big.collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L, 4L, 5L))
     val pow32 = GraphOps.bfs(chain, s1, maxDepth = 3, maxNodes = 1L << 32)
     assert(pow32.collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L, 4L, 5L))
+  }
+
+  /** Spark jobs `body` starts, with its result. Listener events arrive
+    * asynchronously but in order, so a sentinel job run before and after
+    * `body` brackets exactly the jobs `body` started.
+    */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val started = new AtomicInteger
+    val sentinel = new AtomicReference(new CountDownLatch(1))
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.sentinel") != null))
+          sentinel.get.countDown()
+        else started.incrementAndGet()
+    }
+    def sync(): Unit = {
+      val seen = new CountDownLatch(1)
+      sentinel.set(seen)
+      sc.setLocalProperty("graft.sentinel", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.sentinel", null)
+      assert(seen.await(60, TimeUnit.SECONDS), "listener events not delivered")
+    }
+    sc.addSparkListener(listener)
+    try {
+      sync()
+      started.set(0)
+      val out = body
+      sync()
+      (out, started.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Per BFS mode on one small parquet graph — 1 -> {2, 5}, 2 -> 3 -> 4,
+    * and 6 -> 7 -> 8 -> 9 out of reach (7 edges; seed 1's closure is 5
+    * nodes, the last at depth 3) — the jobs the BFS starts while it is
+    * built, and its lineage cuts (distinct checkpoint leaves of the
+    * result's analyzed plan). Every mode must reach the same 5 nodes.
+    */
+  private def assertBfsModes(reliableCheckpoint: Boolean): Unit = {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.LogicalRDD
+    val dir = java.nio.file.Files.createTempDirectory("graft_bfs_modes").toString
+    Seq((1L, 2L), (1L, 5L), (2L, 3L), (3L, 4L), (6L, 7L), (7L, 8L), (8L, 9L))
+      .toDF("src", "dst").write.mode("overwrite").parquet(dir)
+    val e = spark.read.parquet(dir)
+    val s1 = Seq(1L).toDF("node")
+    def run(bfs: => DataFrame): (Int, Int) = {
+      val (out, jobs) = jobsOf(bfs)
+      val cuts = out.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd.id }
+        .distinct.size
+      assert(out.collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L, 4L, 5L))
+      (jobs, cuts)
+    }
+    val got = Map(
+      "shallow" -> run(GraphOps.bfs(e, s1, maxDepth = 3, maxNodes = Long.MaxValue)),
+      // a derived edge frame is cut once (the only cut in shallow mode)
+      "shallow, derived edges" ->
+        run(GraphOps.bfs(e.distinct(), s1, maxDepth = 3, maxNodes = Long.MaxValue)),
+      // counted levels, exit on the empty level 4
+      "uncapped deep" -> run(GraphOps.bfs(e, s1, maxDepth = 6, maxNodes = Long.MaxValue)),
+      // 1 seed + 7 edges <= 10k: the probe passes, every level is cut
+      "capped, gate passed" -> run(GraphOps.bfs(e, s1, maxDepth = 6)),
+      // 1 + 7 > 7: counted levels, exit on the empty level 4
+      "capped, gate failed" -> run(GraphOps.bfs(e, s1, maxDepth = 6, maxNodes = 7L)),
+      "path" -> run(GraphOps.bfsPaths(e, s1, maxDepth = 4, maxNodes = Long.MaxValue)))
+    // (jobs, cuts). Jobs include AQE's per-stage jobs. A reliable
+    // checkpoint writes eagerly, so each counted cut (stableCounted: all
+    // but the levels of a passed gate) pays a second job for its count.
+    val local = Map(
+      "shallow" -> (0, 0), "shallow, derived edges" -> (2, 1),
+      "uncapped deep" -> (18, 5), "capped, gate passed" -> (22, 7),
+      "capped, gate failed" -> (20, 5), "path" -> (19, 5))
+    val want = if (!reliableCheckpoint) local
+      else local ++ Map("uncapped deep" -> (23, 5), "capped, gate passed" -> (23, 7),
+        "capped, gate failed" -> (25, 5), "path" -> (24, 5))
+    assert(got == want)
+  }
+
+  test("one frontier loop: lineage cuts and eager jobs per BFS mode") {
+    assertBfsModes(spark.sparkContext.getCheckpointDir.isDefined)
   }
 
   test("bfs: min hop depth, depth cap respected") {
@@ -107,16 +199,18 @@ class GraphOpsSpec extends SparkTestBase {
     // symmetric star 1 <-> {2,3,4}: outdeg(1)=3, outdeg(leaf)=1
     val edges = Seq((1L, 2L), (2L, 1L), (1L, 3L), (3L, 1L), (1L, 4L), (4L, 1L))
       .toDF("src", "dst")
-    val pr1 = GraphOps.pageRank(edges, iters = 1, materializeEdges = false)
+    def pageRank(iters: Int) =
+      GraphOps.pageRankFromDegreeJoined(GraphOps.degreeJoinedEdges(edges), iters)
+    val pr1 = pageRank(iters = 1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // center: 150000 + 0.85 * (3 leaves x 1e6/1)       = 2,700,000
     // leaf:   150000 + 0.85 * round(1e6/3) = 433,333 (exact hand calc)
     assert(pr1(1L) == 2700000L, s"center: ${pr1(1L)}")
     assert(Seq(2L, 3L, 4L).forall(n => pr1(n) == 433333L), pr1.toString)
     // mass propagates, stays positive, and the run is reproducible
-    val a = GraphOps.pageRank(edges, iters = 3, materializeEdges = false)
+    val a = pageRank(iters = 3)
       .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val b = GraphOps.pageRank(edges, iters = 3, materializeEdges = false)
+    val b = pageRank(iters = 3)
       .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(a == b)
     assert(a.forall(_._2 > 0L) && a.head._2 > a(1)._2,
@@ -127,7 +221,7 @@ class GraphOpsSpec extends SparkTestBase {
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 1L), (1L, 3L), (3L, 1L), (1L, 4L), (4L, 1L))
       .toDF("src", "dst")
-    val pr = GraphOps.pageRank(edges, iters = 3, materializeEdges = false)
+    val pr = GraphOps.pageRankFromDegreeJoined(GraphOps.degreeJoinedEdges(edges), iters = 3)
     // the final frame's ANALYZED plan must be a bare checkpoint scan:
     // zero Join nodes (rounds 1..N-1 live behind LogicalRDDs, so the
     // broadcast collect of round N's rank side never recomputes them —
@@ -358,6 +452,7 @@ class GraphOpsSpec extends SparkTestBase {
     spark.sparkContext.setCheckpointDir(dir)
     try {
       val reliable = GraphOps.bfs(chain, seeds, maxDepth = 6, maxNodes = 100L)
+      assertBfsModes(reliableCheckpoint = true)
       assert(reliable.exceptAll(local).count() == 0)
       assert(local.exceptAll(reliable).count() == 0)
       // the checkpoint dir was actually used (files written)
@@ -374,15 +469,15 @@ class GraphOpsSpec extends SparkTestBase {
   test("triangleCounts: exact per-node counts on a known graph, orientation-proof") {
     import spark.implicits._
     // K4 on {1,2,3,4} (4 triangles, each node in 3), plus a triangle
-    // {10,11,12}, a dangling edge (20,21), and duplicate/reversed input
-    // edges that must not double-count
-    val edges = Seq(
+    // {10,11,12} and a dangling edge (20,21), given the way the
+    // co-purchase artifact stores edges: symmetric and distinct
+    val und = Seq(
       (1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
-      (2L, 1L), (3L, 1L), // reversed duplicates
-      (10L, 11L), (11L, 12L), (12L, 10L),
-      (20L, 21L)
-    ).toDF("src", "dst")
-    val out = graft.operators.GraphOps.triangleCounts(edges)
+      (10L, 11L), (11L, 12L), (10L, 12L),
+      (20L, 21L))
+    val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
+    val out = GraphOps.triangleCountsFromOriented(
+        GraphOps.orientEdgesFromSymmetric(edges))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L,
       10L -> 1L, 11L -> 1L, 12L -> 1L))

@@ -14,7 +14,9 @@ class IndexesSpec extends SparkTestBase {
 
   private val indexConsumers = Seq(
     "q14_fts_keyword_topk", "q16_sparse_dot_topk", "q22_graph_bfs_closure",
-    "q23_graph_related_cooccur", "q28_dedup_minhash_lsh", "q34_text_winnow_pairs",
+    "q23_graph_related_cooccur", "q25_graph_impact_reach",
+    "q169_graph_lpa_communities", "q180_graph_kcore",
+    "q28_dedup_minhash_lsh", "q34_text_winnow_pairs",
     "q42_hybrid_search_e2e", "q43_graph_hotspots_scaled",
     "q45_dedup_canonical_groups",
     // the shared 8-gram/8-span artifacts (r9): sliding gram stream +
@@ -46,8 +48,13 @@ class IndexesSpec extends SparkTestBase {
   }
 
   test("code-family build phases over the fixture files serve the derived-mode rows") {
+    // the BFS consumers are here because each edge cut is decided from
+    // the plan, and the two modes plan differently
     val consumers = Seq("q205_lexical_hotpath_e2e", "q206_negation_hotpath",
-      "q49_callgraph_tiers", "q63_health_report")
+      "q49_callgraph_tiers", "q63_health_report",
+      "q50_impact_diff", "q53_trace_paths", "q70_onboard_tour", "q71_task_brief",
+      "q79_suggest_notes", "q100_focused_read", "q110_explain_card",
+      "q111_file_brief", "q157_cross_project_impact", "q158_cross_project_trace")
     def rows(n: String) =
       SparkEntry.queries(n)(spark, sf).collect().toSeq.sortBy(_.toString)
     val derived = consumers.map(n => n -> rows(n)).toMap

@@ -2,12 +2,21 @@
 """Dev-side emulation of the driver's DuckDB correctness gate.
 
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
+       python3 tools/check_oracle.py --against <otherVerifyOutDir> <verifyOutDir>
 
 Reads each <outDir>/<name>/ parquet result (written by graft.Verify),
 runs the matching oracle SQL from <outDir>/oracle_sql.json in DuckDB with
 the sf tables registered as views, and compares (schema by sorted column
 name, then row-sorted values). Exact match expected; floats compared to
 1e-9 relative just to report near-misses distinctly.
+
+--against compares two Verify outputs instead, e.g. of two commits: each
+query's result against the other dir's through the same canonical form
+and the same column/row/float checks, without running DuckDB. Rows are
+sorted before comparing, so queries with no ORDER BY (q76, q109, q133,
+q170 write rows in a run-dependent order) compare equal; a query present
+in only one dir fails. It takes seconds where the oracle run takes
+about 25 minutes at sf0.01.
 
 This is DEV TOOLING ONLY — the shipped Scala library has no Python
 dependency.
@@ -42,7 +51,56 @@ def canon(df):
     return df
 
 
+def mismatch(s, d, left, right):
+    """None when two canonical frames are equal, else why not."""
+    if list(s.columns) != list(d.columns):
+        return f"columns {left}={list(s.columns)} {right}={list(d.columns)}"
+    if len(s) != len(d):
+        return f"rowcount {left}={len(s)} {right}={len(d)}"
+    for c in s.columns:
+        if pd.api.types.is_float_dtype(s[c]) or pd.api.types.is_float_dtype(d[c]):
+            a, b = s[c].astype("float64").values, d[c].astype("float64").values
+            if not np.array_equal(a, b):
+                if np.allclose(a, b, rtol=1e-9, atol=1e-12, equal_nan=True):
+                    return f"col {c}: float near-miss (would FAIL exact hash)"
+                return f"col {c}: float mismatch"
+        elif not s[c].equals(d[c]):
+            diff = (s[c].astype(str) != d[c].astype(str))
+            i = int(np.argmax(diff.values))
+            return f"col {c}: row {i}: {left}={s[c][i]!r} {right}={d[c][i]!r}"
+    return None
+
+
+def result_names(out_dir):
+    return sorted(d for d in os.listdir(out_dir)
+                  if os.path.isdir(os.path.join(out_dir, d)))
+
+
+def against(other_dir, out_dir):
+    names = sorted(set(result_names(out_dir)) | set(result_names(other_dir)))
+    n_pass = n_fail = 0
+    for name in names:
+        mine = load_result(os.path.join(out_dir, name))
+        other = load_result(os.path.join(other_dir, name))
+        if mine is None or other is None:
+            side = "this" if mine is None else "other"
+            print(f"FAIL  {name}: no result in the {side} dir")
+            n_fail += 1
+            continue
+        why = mismatch(canon(mine), canon(other), "this", "other")
+        if why:
+            print(f"FAIL  {name}: {why}")
+            n_fail += 1
+        else:
+            print(f"PASS  {name} ({len(mine)} rows)")
+            n_pass += 1
+    print(f"\n== {n_pass} pass, {n_fail} fail ==")
+    sys.exit(1 if n_fail else 0)
+
+
 def main():
+    if sys.argv[1] == "--against":
+        against(sys.argv[2], sys.argv[3])
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     con = duckdb.connect()
     for t in TABLES:
@@ -50,10 +108,8 @@ def main():
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracles = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
-    names = sorted(d for d in os.listdir(out_dir)
-                   if os.path.isdir(os.path.join(out_dir, d)))
     n_pass = n_fail = n_rows_only = 0
-    for name in names:
+    for name in result_names(out_dir):
         spark_df = load_result(os.path.join(out_dir, name))
         if spark_df is None:
             print(f"FAIL  {name}: no spark result written")
@@ -69,36 +125,12 @@ def main():
             print(f"FAIL  {name}: duckdb error: {e}")
             n_fail += 1
             continue
-        s, d = canon(spark_df), canon(duck_df)
-        if list(s.columns) != list(d.columns):
-            print(f"FAIL  {name}: columns spark={list(s.columns)} duck={list(d.columns)}")
-            n_fail += 1
-            continue
-        if len(s) != len(d):
-            print(f"FAIL  {name}: rowcount spark={len(s)} duck={len(d)}")
-            n_fail += 1
-            continue
-        mismatch = None
-        for c in s.columns:
-            if pd.api.types.is_float_dtype(s[c]) or pd.api.types.is_float_dtype(d[c]):
-                a, b = s[c].astype("float64").values, d[c].astype("float64").values
-                if not np.array_equal(a, b):
-                    if np.allclose(a, b, rtol=1e-9, atol=1e-12, equal_nan=True):
-                        mismatch = f"col {c}: float near-miss (would FAIL exact hash)"
-                    else:
-                        mismatch = f"col {c}: float mismatch"
-                    break
-            else:
-                if not s[c].equals(d[c]):
-                    diff = (s[c].astype(str) != d[c].astype(str))
-                    i = int(np.argmax(diff.values))
-                    mismatch = f"col {c}: row {i}: spark={s[c][i]!r} duck={d[c][i]!r}"
-                    break
-        if mismatch:
-            print(f"FAIL  {name}: {mismatch}")
+        why = mismatch(canon(spark_df), canon(duck_df), "spark", "duck")
+        if why:
+            print(f"FAIL  {name}: {why}")
             n_fail += 1
         else:
-            print(f"PASS  {name} ({len(s)} rows)")
+            print(f"PASS  {name} ({len(spark_df)} rows)")
             n_pass += 1
     print(f"\n== {n_pass} pass, {n_fail} fail, {n_rows_only} rows-only ==")
     sys.exit(1 if n_fail else 0)
