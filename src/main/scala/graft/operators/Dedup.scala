@@ -289,8 +289,10 @@ object Dedup {
       .select(least(col("x"), col("y")).as("u"),
         greatest(col("x"), col("y")).as("v"))
       .distinct()
-    var edges = canon(pairs.select(col("id_a").as("x"), col("id_b").as("y")))
-      .transform(graft.operators.Materialize.stable)
+    // each round's edge set is cut and counted in one job; the count
+    // carries into the next round's fixpoint test
+    var (edges, nEdges) = Materialize.stableCounted(
+      canon(pairs.select(col("id_a").as("x"), col("id_b").as("y"))))
     var converged = false
     var round = 0
     while (!converged && round < maxRounds) {
@@ -305,14 +307,14 @@ object Dedup {
       // small-star input: canonical (u, v) already orients every edge
       // to its larger endpoint v; Γ⁻(v) = all u partners
       val smins = large.groupBy(col("v")).agg(min(col("u")).as("m"))
-      val next = canon(large.join(smins, Seq("v"))
-        .select(col("u").as("x"), col("m").as("y"))
-        .unionByName(large.join(smins, Seq("v"))
-          .select(col("v").as("x"), col("m").as("y"))))
-        .transform(graft.operators.Materialize.stable)
-      converged = next.count() == edges.count() &&
-        next.exceptAll(edges).isEmpty
+      val (next, nNext) = Materialize.stableCounted(
+        canon(large.join(smins, Seq("v"))
+          .select(col("u").as("x"), col("m").as("y"))
+          .unionByName(large.join(smins, Seq("v"))
+            .select(col("v").as("x"), col("m").as("y")))))
+      converged = nNext == nEdges && next.exceptAll(edges).isEmpty
       edges = next
+      nEdges = nNext
       round += 1
     }
     // Exhausting maxRounds without a fixpoint would silently SPLIT a

@@ -233,15 +233,15 @@ object GraphOps {
     * a materialized frame): it is read once per round.
     */
   def pageRankFromDegreeJoined(withDeg: DataFrame, iters: Int = 3): DataFrame = {
-    // materialize the init frame BEFORE counting (the q169 LPA order):
+    // cut and count the init frame in one job (the q169 LPA order):
     // otherwise the strategy count and round 1 each re-run the
-    // |edges|-sized distinct
-    var pr = withDeg.select(col("src").as("node")).distinct()
-      .withColumn("pr_micro", lit(1000000L))
-      .transform(Materialize.stable)
-    // one count up front (|nodes| rows) decides the per-round join
-    // strategy; the loop itself never re-counts
-    val useBroadcast = pr.count() <= PageRankBroadcastNodeCap
+    // |edges|-sized distinct. The one count up front (|nodes| rows)
+    // decides the per-round join strategy; the loop never re-counts
+    val (pr0, nNodes) = Materialize.stableCounted(
+      withDeg.select(col("src").as("node")).distinct()
+        .withColumn("pr_micro", lit(1000000L)))
+    var pr = pr0
+    val useBroadcast = nNodes <= PageRankBroadcastNodeCap
     (1 to iters).foreach { _ =>
       // Small graphs: broadcast the rank frame so each round is a
       // map-side hash join over the pinned edge frame (the only shuffle

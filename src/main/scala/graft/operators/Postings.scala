@@ -109,7 +109,10 @@ object Postings {
     * can union several fields' partials and pay ONE aggregation exchange
     * instead of one per field plus full-outer joins (each partial is an
     * exact integer micro-unit, so any grouping of the sums is
-    * bit-identical).
+    * bit-identical). Every query-side column except `token` passes
+    * through, so per-query or per-token settings carried on the query
+    * rows reach that one aggregation without a join back. Output:
+    * (query-side columns but token, idCol, term_u).
     */
   def bm25TermScores(postings: DataFrame, dl: DataFrame, idf: DataFrame,
                      queryTokens: DataFrame, idCol: String = "doc_id",
@@ -129,7 +132,8 @@ object Postings {
           (col("tf") + lit(k1) *
             (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))) *
           lit(1000000.0), 0).cast("long"))
-      .select(col("query_id"), col(idCol), col("term_u"))
+      .select((queryTokens.columns.filter(_ != "token").map(col) :+
+        col(idCol) :+ col("term_u")).toSeq: _*)
 
   /** Sparse dot-product scoring (SPLADE shape): postings carry integer
     * weights (tf here; model weights in a real SPLADE stage), the query

@@ -1584,8 +1584,8 @@ private[queries] trait CodeQB { self: CodeQA with CodeQC =>
     // operator subtracts visited and carries the node-count rail).
     // resolved is limit(1), so the single-seed visited set minus depth
     // 0 equals the old frontier union after the =!= t_name filter.
-    val rev = edges.select(col("callee").as("src"), col("caller").as("dst"))
-      .distinct()
+    val rev = Indexes.resolvedCallEdges(s)
+      .select(col("callee").as("src"), col("caller").as("dst"))
     val reached = graft.operators.GraphOps.bfs(
         rev, resolved.select(col("t_name").as("node")), maxDepth = 5)
       .filter(col("depth") >= 1)

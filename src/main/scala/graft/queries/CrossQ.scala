@@ -51,8 +51,10 @@ object CrossQ {
   def q157(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val sites = Projects.sites(s)
-    val rev = sites.select(col("callee").as("src"), col("caller").as("dst"))
-      .distinct()
+    // the union call graph's distinct pairs are the prebuilt
+    // resolved-edge view (project tags ride on the sites only)
+    val rev = Indexes.resolvedCallEdges(s)
+      .select(col("callee").as("src"), col("caller").as("dst"))
     val closure = GraphOps.bfs(rev, Seq("log_event").toDF("node"),
       maxDepth = 3, maxNodes = Long.MaxValue)
     val v = closure.select(col("node").as("vn"), col("depth").as("vd"))
@@ -112,9 +114,8 @@ object CrossQ {
     */
   def q158(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sites = Projects.sites(s)
-    val fwd = sites.select(col("caller").as("src"), col("callee").as("dst"))
-      .distinct()
+    val fwd = Indexes.resolvedCallEdges(s)
+      .select(col("caller").as("src"), col("callee").as("dst"))
     val paths = GraphOps.bfsPaths(fwd, Seq("test_render").toDF("node"),
       maxDepth = 4, maxNodes = Long.MaxValue)
     val hit = paths.filter(col("node") === "log_event").select(col("path"))

@@ -321,33 +321,33 @@ object Graph {
     * discipline). Output: the 20 largest communities.
     *
     * Scale: each round is one (edges ⋈ labels) shuffle + one
-    * (node, label) count + one per-node argmax window — nothing
+    * (node, label) count + one per-node argmax aggregate — nothing
     * corpus-global; labels stay |nodes|-sized. The same prebuilt edge
     * table as the rest of the graph family.
     */
   def q169(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // read once per round: cut the derived edge set once; prebuilt
     // edges are a parquet scan, and re-checkpointing 2.4M rows per run
     // is pure cost
     val e = graft.operators.Materialize.unlessScan(Indexes.coPurchaseEdges(s, dir))
-    var labels = e.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-      .transform(graft.operators.Materialize.stable)
+    val (labels0, nNodes) = graft.operators.Materialize.stableCounted(
+      e.select(col("src").as("node")).distinct()
+        .withColumn("label", col("node")))
+    var labels = labels0
     // label frame is |nodes|-sized: broadcast it (gated on the same
     // node cap as pageRank — an explicit hint is always honored) so
     // each round's join is map-side; only the count shuffle remains
-    val useBroadcast = labels.count() <= GraphOps.PageRankBroadcastNodeCap
+    val useBroadcast = nNodes <= GraphOps.PageRankBroadcastNodeCap
     (1 to 3).foreach { _ =>
       val lab = labels.select(col("node").as("dst"), col("label"))
       val nbr = e.join(if (useBroadcast) broadcast(lab) else lab, Seq("dst"))
         .groupBy(col("src").as("node"), col("label"))
         .agg(count(lit(1)).as("cnt"))
-      val w = Window.partitionBy(col("node"))
-        .orderBy(col("cnt").desc, col("label").asc)
-      labels = nbr.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("node"), col("label"))
+      // the (cnt desc, label asc) argmax as an aggregate: the min of
+      // (−cnt, label) per node, no sort
+      labels = nbr.groupBy(col("node"))
+        .agg(min(struct((-col("cnt")).as("ncnt"), col("label"))).as("m"))
+        .select(col("node"), col("m.label").as("label"))
         .transform(graft.operators.Materialize.stable)
     }
     val sizes = labels.groupBy(col("label").as("community"))

@@ -212,12 +212,14 @@ object HybridQ {
     * behavior switching at src/search/router.rs:126-174): negation
     * queries skip synonym expansion, and docs matching ONLY the negated
     * term (no positive-token match in any field) are demoted by the
-    * binary-fraction factor before the ranking pools — the pure-negative
-    * semantics of BatchRetrieval's demotion stage (the blanket
+    * binary-fraction factor before the ranking pools (the blanket
     * body-match variant was measured at −24 pp negation R@1 and
     * rejected; see the doc of BatchRetrieval's scoring constants). The
-    * oracle replays the whole pipeline including an independent
-    * demotion CTE (floor'd integer micro-units, the money discipline).
+    * hot path decides it inside its one (query, doc) aggregation, as
+    * "every matched token is negated"; the oracle replays the whole
+    * pipeline with an independent formulation of the demotion — negated
+    * hits EXCEPT positive hits over all three fields, joined back
+    * (floor'd integer micro-units, the money discipline).
     */
   private val negationQueries: Seq[String] = Seq(
     "parse input without config", "render output without cache",

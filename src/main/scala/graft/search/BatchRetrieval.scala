@@ -15,7 +15,9 @@ import graft.operators.{Fusion, Postings, Scoring, TopK}
   *   route (rules classifier + curated synonym expansion + type
   *   hints, driver-side per query — the reference's in-process
   *   router, router.rs / synonyms.rs:221) →
-  *   sanitize → expand → BM25 keyword leg over the body postings
+  *   sanitize → expand → BM25 keyword leg over the body / name / doc
+  *   postings, ONE (query, doc) aggregation that also applies the
+  *   per-category doc-field weight and the negation demotion
   *   (pool 3×k — the fts_match `limit.saturating_mul(3)` factor,
   *   query.rs:581) →
   *   name-blended lexical-semantic leg (the NameBlend stand-in for
@@ -25,14 +27,16 @@ import graft.operators.{Fusion, Postings, Scoring, TopK}
   *   gated on name-like queries, name_match.rs:22-78) →
   *   RRF fusion (K=60) keeping a 2×k fused pool (the rrf_fuse
   *   `limit.saturating_mul(2)`, query.rs:610) →
-  *   parent dedup (containment-derived parent keys, query.rs:625) →
+  *   parent dedup (query.rs:625: doc_key already merges window
+  *   siblings, and the parents/metadata join keeps one row per
+  *   (query, doc), so it needs no operator) →
   *   parent boost ×(1 + 0.05·children), cap 1.15 (candidate.rs:59) →
   *   type boost ×1.2 on router type hints (query.rs:655) →
   *   top-k, (score desc, id asc).
   *
   * Every stage is an operator the correctness registry already gates
   * in isolation (Postings.bm25 = q204/q85, Fusion.rrf = q42, the name
-  * tier ladder = q19, parent dedup = q41, type boost = q42, synonym
+  * tier ladder = q19, type boost = q42, synonym
   * expansion = q104, sanitize = q201); this composes them for a real
   * eval artifact where queries arrive as strings.
   *
@@ -226,18 +230,22 @@ object BatchRetrieval {
                      index: Option[FtsIndex] = None): DataFrame = {
     import spark.implicits._
     val routed = routeAll(queries)
-    val sep = KeySep
     val docs = docsOf(chunks)
 
     // ---- query-side frames (all broadcast-sized by contract) ----
-    val qFts = routed.map(r => (r.id, r.expanded)).toDF("query_id", "qtext")
-      .select(col("query_id"), explode(TextFns.ftsTokens(col("qtext"))).as("token"))
+    // each keyword-leg token row carries its query's doc-field weight
+    // (the reference resolves weights per router category,
+    // router.rs:692-760) and whether it is one of the query's negated
+    // tokens, so the (query, doc) aggregation below needs no join back
+    val qFts = routed.map(r => (r.id, r.expanded, docFieldWeight(r.category),
+        r.negTokens)).toDF("query_id", "qtext", "doc_w", "neg_toks")
+      .select(col("query_id"), col("doc_w"), col("neg_toks"),
+        explode(TextFns.ftsTokens(col("qtext"))).as("token"))
+      .select(col("query_id"), col("token"), col("doc_w"),
+        array_contains(col("neg_toks"), col("token")).as("neg"))
       .distinct()
-    // the per-category doc weight rides in qMeta (the reference
-    // resolves weights per router category, router.rs:692-760)
     val qMeta = routed.map(r => (r.id, r.id.toLowerCase, r.nameLike,
-        r.typeHints, docFieldWeight(r.category)))
-      .toDF("query_id", "qlower", "name_like", "hints", "doc_w")
+        r.typeHints)).toDF("query_id", "qlower", "name_like", "hints")
       .withColumn("qwords", TextFns.ftsTokens(col("qlower")))
     // RAW query tokens for the name tiers (NameMatcher matches the
     // query as typed, not the synonym expansion — name_match.rs:103)
@@ -265,6 +273,20 @@ object BatchRetrieval {
     // union for every batch, as the oracle's `ftsu` does: a doc-only
     // match of a zero-doc-weight query stays an fts_u = 0 candidate, so
     // a query's rows never depend on the other queries in its batch.
+    //
+    // The same aggregation applies the negation demotion (the lexical
+    // mitigation for the reference's dense-leg negation handling): a
+    // doc matching ONLY the negated term — none of the query's positive
+    // tokens in any field — drops by a binary-fraction factor (floor'd
+    // so integer micro-units stay oracle-exact). Every candidate matched
+    // at least one of its query's tokens, the positive tokens are
+    // exactly the non-negated ones, and the term rows cover all three
+    // fields, so "negated-only" is "every matched token is negated".
+    // A doc matching positives AND mentioning the negated term is
+    // untouched: negation golds routinely reference the negated concept
+    // themselves ("without X" code says "skips X"), so a blanket
+    // body-match demote was measured to demote the golds (r13 sweep,
+    // −24 pp negation R@1).
     def fieldTerms(f: FieldIndex, tag: String): DataFrame =
       Postings.bm25TermScores(f.postings, f.dl, f.idf, qFts, "doc_key")
         .withColumn("field", lit(tag))
@@ -275,15 +297,18 @@ object BatchRetrieval {
       .groupBy(col("query_id"), col("doc_key"))
       .agg(sum(when(col("field") === "b", col("term_u"))).as("bm25_u"),
         sum(when(col("field") === "n", col("term_u"))).as("name_u"),
-        sum(when(col("field") === "d", col("term_u"))).as("doc_u"))
-      .join(broadcast(qMeta.select(col("query_id"), col("doc_w"))),
-        Seq("query_id"))
+        sum(when(col("field") === "d", col("term_u"))).as("doc_u"),
+        max(col("doc_w")).as("doc_w"),
+        bool_and(col("neg")).as("neg_only"))
       .withColumn("fts_u",
         coalesce(col("bm25_u"), lit(0L)) +
           coalesce(col("name_u"), lit(0L)) +
           round(col("doc_w") *
             coalesce(col("doc_u"), lit(0L)), 0).cast("long"))
-      .select(col("query_id"), col("doc_key"), col("fts_u"))
+      .select(col("query_id"), col("doc_key"),
+        when(col("neg_only"),
+          floor(col("fts_u") * lit(NegationDemote)).cast("long"))
+          .otherwise(col("fts_u")).as("fts_u"))
 
     // ---- type_filtered HARD filter (reference scoring/filter.rs:
     // WHERE chunk_type IN (...), routed per category at query time) —
@@ -292,58 +317,17 @@ object BatchRetrieval {
     // the ×1.2 boost past the gold ----
     val hardQs = routed.filter(r =>
       r.category == "type_filtered" && r.typeHints.nonEmpty)
-    val ftsFiltered =
-      if (hardQs.isEmpty) ftsWeighted
-      else {
-        val qHard = hardQs.map(r => (r.id, r.typeHints))
-          .toDF("query_id", "allowed")
-        ftsWeighted.join(broadcast(qHard), Seq("query_id"), "left")
-          .join(ix.meta.select(col("doc_key"), col("chunk_type").as("__ct")),
-            Seq("doc_key"), "left")
-          .filter(col("allowed").isNull ||
-            (col("__ct").isNotNull &&
-              array_contains(col("allowed"), col("__ct"))))
-          .drop("allowed", "__ct")
-      }
-
-    // ---- negation demotion (the lexical mitigation for the
-    // reference's dense-leg negation handling): docs that match ONLY
-    // the negated term — none of the query's positive tokens in any
-    // field — drop by a binary-fraction factor (floor'd so integer
-    // micro-units stay oracle-exact). A doc matching positives AND
-    // mentioning the negated term is untouched: negation golds
-    // routinely reference the negated concept themselves ("without X"
-    // code says "skips X"), so a blanket body-match demote was
-    // measured to demote the golds (r13 sweep, −24 pp negation R@1)
-    val negQs = routed.filter(_.negTokens.nonEmpty)
+    val qHard = hardQs.map(r => (r.id, r.typeHints)).toDF("query_id", "allowed")
     val ftsScore =
-      if (negQs.isEmpty) ftsFiltered
-      else {
-        val qNeg = negQs.flatMap(r => r.negTokens.map(t => (r.id, t)))
-          .toDF("query_id", "token")
-        // positive side = the query's keyword-leg tokens minus the
-        // negated ones (driver-computed, broadcast)
-        val qPos = negQs.flatMap { r =>
-          val neg = r.negTokens.toSet
-          r.expanded.toLowerCase.split("[^a-z0-9]+")
-            .filter(_.length >= 2).filterNot(neg).distinct
-            .map(t => (r.id, t))
-        }.toDF("query_id", "token")
-        def hits(q: DataFrame): DataFrame =
-          Seq(ix.body, ix.name, ix.doc).map(f =>
-            f.postings.select(col("doc_key"), col("token"))
-              .join(broadcast(q), Seq("token"))
-              .select(col("query_id"), col("doc_key")))
-            .reduce(_ unionByName _).distinct()
-        val negOnly = hits(qNeg).join(hits(qPos),
-            Seq("query_id", "doc_key"), "left_anti")
-          .withColumn("__neg", lit(true))
-        ftsFiltered.join(negOnly, Seq("query_id", "doc_key"), "left")
-          .withColumn("fts_u", when(col("__neg"),
-            floor(col("fts_u") * lit(NegationDemote)).cast("long"))
-            .otherwise(col("fts_u")))
-          .drop("__neg")
-      }
+      if (hardQs.isEmpty) ftsWeighted
+      else ftsWeighted.join(broadcast(qHard), Seq("query_id"), "left")
+        .join(ix.meta.select(col("doc_key"), col("chunk_type").as("__ct")),
+          Seq("doc_key"), "left")
+        .filter(col("allowed").isNull ||
+          (col("__ct").isNotNull &&
+            array_contains(col("allowed"), col("__ct"))))
+        .drop("allowed", "__ct")
+
     // ONE 3×k pool subtree feeds both the keyword leg and the
     // lexical-semantic leg's body pool (r12 verdict wrong #2: the two
     // legs used to each call perGroup on the same input — exchange
@@ -374,14 +358,10 @@ object BatchRetrieval {
         Seq("doc_key"))
     val tierFiltered =
       if (hardQs.isEmpty) tierCands0
-      else {
-        val qHard = hardQs.map(r => (r.id, r.typeHints))
-          .toDF("query_id", "allowed")
-        tierCands0.join(broadcast(qHard), Seq("query_id"), "left")
-          .filter(col("allowed").isNull ||
-            array_contains(col("allowed"), col("chunk_type")))
-          .drop("allowed")
-      }
+      else tierCands0.join(broadcast(qHard), Seq("query_id"), "left")
+        .filter(col("allowed").isNull ||
+          array_contains(col("allowed"), col("chunk_type")))
+        .drop("allowed")
     val tierCands = tierFiltered.drop("chunk_type")
       .join(broadcast(qMeta), Seq("query_id"))
       .withColumn("name_lower", lower(col("name")))
@@ -434,25 +414,23 @@ object BatchRetrieval {
 
     // containment parents + per-key metadata ride in from the index
     // (parentsOf / metaOf — derived inline only when no index is
-    // supplied, e.g. the correctness gate's derived mode)
+    // supplied, e.g. the correctness gate's derived mode).
+    // Parent DEDUP is keyed on the windowing parent in the reference
+    // (query.rs:625-640); our doc_key = (origin, name) already merges
+    // window siblings, and `fused` holds one row per (query, doc) while
+    // parents/meta hold one per doc_key, so the join keeps one row per
+    // (query, doc) and needs no dedup after it. The containment parent
+    // feeds the BOOST below, which is what moves ranks
+    // (candidate.rs:59-120: a container with >= 2 children in the pool
+    // gains 1 + 0.05·children, cap 1.15)
     val withParent = fused.join(ix.parents, Seq("doc_key"), "left")
       .join(ix.meta, Seq("doc_key"))
-
-    // parent DEDUP is keyed on the windowing parent in the reference
-    // (query.rs:625-640); our doc_key = (origin, name) already merges
-    // window siblings, so the dedup here collapses residual same-key
-    // rows only — the containment parent feeds the BOOST below, which
-    // is what moves ranks (candidate.rs:59-120: a container with >= 2
-    // children in the post-dedup pool gains 1 + 0.05·children, cap
-    // 1.15)
-    val deduped = Scoring.parentDedup(withParent, col("rrf_score"),
-      col("doc_key"), col("doc_key"), extraKeys = Seq(col("query_id")))
-    val childCounts = deduped.filter(col("parent_key").isNotNull)
+    val childCounts = withParent.filter(col("parent_key").isNotNull)
       .select(col("query_id").as("cq"), col("parent_key").as("ck"))
       .groupBy(col("cq"), col("ck"))
       .agg(count(lit(1)).as("n_children"))
       .filter(col("n_children") >= 2)
-    val boosted = deduped
+    val boosted = withParent
       .join(childCounts,
         col("query_id") === col("cq") && col("doc_key") === col("ck"),
         "left")

@@ -168,6 +168,48 @@ class EndToEndSpec extends SparkTestBase {
         hotPath(Seq(q, "how does process work")).filter(_._1 == q), q)
     }
   }
+
+  // the negation demotion and the parent dedup add no side plan: the
+  // demotion is decided inside the one (query, doc) aggregation, and the
+  // parents/metadata join already keeps one row per (query, doc)
+  test("q206 plans no negated-hit anti join and no per-doc window over rrf_score") {
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, Window}
+    val plan = SparkEntry.queries("q206_negation_hotpath")(
+      spark, "/root/testdata/sf0.01").queryExecution.analyzed
+    val antiJoins = plan.collect { case j: Join if j.joinType == LeftAnti => j }
+    assert(antiJoins.isEmpty, s"${antiJoins.size} left-anti joins in q206")
+    // the fused pool's per-query top-k is the only window over rrf_score
+    // (its subtree appears once per consumer)
+    val rrfPartitions = plan.collect {
+      case w: Window if w.orderSpec.exists(
+        _.child.references.exists(_.name == "rrf_score")) =>
+        w.partitionSpec.flatMap(_.references.toSeq).map(_.name)
+    }
+    assert(rrfPartitions.nonEmpty)
+    assert(rrfPartitions.forall(_ == Seq("query_id")),
+      s"windows over rrf_score partitioned by $rrfPartitions")
+  }
+
+  test("q206's batch has fts candidates that match only negated tokens") {
+    // independent of the hot path: the routed keyword tokens of each
+    // negation query against the three FTS posting fields
+    val ix = Indexes.hpFtsIndex(spark)
+    val postings = Seq(ix.body, ix.name, ix.doc)
+      .map(_.postings.select(col("doc_key"), col("token")))
+      .reduce(_ union _)
+    val routed = BatchRetrieval.routeAll(HotPathRows.q206.map(_._1).distinct)
+    assert(routed.forall(_.negTokens.nonEmpty))
+    val negOnly = routed.map { r =>
+      val toks = r.expanded.toLowerCase.split("[^a-z0-9]+")
+        .filter(_.length >= 2).distinct.toSeq
+      postings.filter(col("token").isin(toks: _*))
+        .groupBy(col("doc_key")).agg(collect_set(col("token")).as("m"))
+        .collect().count(_.getSeq[String](1).forall(r.negTokens.contains))
+    }
+    assert(negOnly.sum > 0,
+      "no candidate of q206 matches only its negated tokens")
+  }
 }
 
 /** Recorded ranked rows (query_id, rank, file, name) at sf0.01 of

@@ -75,6 +75,24 @@ class IndexesSpec extends SparkTestBase {
     } finally Indexes.setRoot(None)
   }
 
+  test("hp_parents and hp_meta hold one row per doc_key") {
+    // the hot path joins both onto its one-row-per-(query, doc) fused
+    // pool with no dedup after, so neither may repeat a doc_key — also
+    // where one file has several chunks of one name
+    val chunks = Indexes.codeChunks(spark)
+    val sameNamed = chunks.groupBy(col("origin"), col("name")).count()
+      .filter(col("count") > 1)
+    assert(sameNamed.count() > 0, "no same-named chunks in one fixture file")
+    val ix = Indexes.hpFtsIndex(spark)
+    Seq("hp_parents" -> ix.parents, "hp_meta" -> ix.meta).foreach { case (n, df) =>
+      val repeated = df.groupBy(col("doc_key")).count().filter(col("count") > 1)
+      assert(repeated.count() == 0, s"$n repeats a doc_key")
+    }
+    val keys = sameNamed.select(concat_ws(
+      graft.search.BatchRetrieval.KeySep, col("origin"), col("name")).as("doc_key"))
+    assert(ix.meta.join(keys, Seq("doc_key")).count() == sameNamed.count())
+  }
+
   test("built-index mode is result-identical to derived mode") {
     val ixDir = java.nio.file.Files.createTempDirectory("graft_ix_test").toString
     val derived = indexConsumers.map { n =>

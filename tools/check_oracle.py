@@ -8,7 +8,10 @@ Reads each <outDir>/<name>/ parquet result (written by graft.Verify),
 runs the matching oracle SQL from <outDir>/oracle_sql.json in DuckDB with
 the sf tables registered as views, and compares (schema by sorted column
 name, then row-sorted values). Exact match expected; floats compared to
-1e-9 relative just to report near-misses distinctly.
+1e-9 relative just to report near-misses distinctly. A query named in
+oracle_sql.json with no result dir is reported MISSING and counted as a
+failure: Verify writes no dir for a query that throws, and a dump
+filtered by name (Verify's third argument) lists the names it skipped.
 
 --against compares two Verify outputs instead, e.g. of two commits: each
 query's result against the other dir's through the same canonical form
@@ -109,7 +112,8 @@ def main():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracles = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     n_pass = n_fail = n_rows_only = 0
-    for name in result_names(out_dir):
+    written = result_names(out_dir)
+    for name in written:
         spark_df = load_result(os.path.join(out_dir, name))
         if spark_df is None:
             print(f"FAIL  {name}: no spark result written")
@@ -132,7 +136,12 @@ def main():
         else:
             print(f"PASS  {name} ({len(spark_df)} rows)")
             n_pass += 1
-    print(f"\n== {n_pass} pass, {n_fail} fail, {n_rows_only} rows-only ==")
+    missing = sorted(set(oracles) - set(written))
+    for name in missing:
+        print(f"MISSING  {name}: no spark result written")
+    n_fail += len(missing)
+    print(f"\n== {n_pass} pass, {n_fail} fail ({len(missing)} missing), "
+          f"{n_rows_only} rows-only ==")
     sys.exit(1 if n_fail else 0)
 
 
