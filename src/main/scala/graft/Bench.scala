@@ -40,11 +40,10 @@ object Bench {
       .appName("graft-bench")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
-      // A/B knob (default ON = stock behavior): parallelismFirst=false
-      // coalesces tiny shuffles but was measured to under-parallelize
-      // the CPU-dense gram/explode stages (bytes small, CPU/byte huge)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
+      // AQE parallelismFirst stays at its stock true: false coalesces
+      // tiny shuffles but under-parallelizes the CPU-dense gram/explode
+      // stages (SURVEY.md standing decisions, r8 A/B: c4 2.13 -> 1.64
+      // qps, q169 3.1 -> 16.5 s)
       // stock join strategy (r14 A/B: 70.1 s stock vs 70.8 s shuffled-hash)
       .config("spark.sql.session.timeZone", "UTC")
       // one-time: events.parquet stores INT64 TIMESTAMP(NANOS); every

@@ -62,24 +62,25 @@ object HybridQ {
     val postings = Indexes.postings(s, dir)
     val sparse = Postings.sparseDot(postings,
       sparseTokens.toDF("query_id", "token", "qw"))
+    // both legs are top-60 pools over one row per (query_id, doc_id):
+    // Postings.score groups by it, cosineKnn pairs each query with each
+    // embedding row (key vec_id) once, and the α base full-outer joins
+    // on it — so RRF fuses the pools' own ranks
     val fts = TopK.perGroup(
       Postings.score(postings, ftsTokens.toDF("query_id", "token"))
         .withColumn("score", col("n_match") * lit(1000000L) + col("tf_sum")),
       Seq(col("query_id")), col("score"), col("doc_id"), 60)
-      .select(col("query_id"), col("doc_id"),
-        col("score").cast("double").as("score"))
 
     // per-query α fusion of dense + sparse, rounded for rank stability
     val semantic = TopK.perGroup(
-        Fusion.alphaInterpolatePerQuery(dense, sparse, alphas,
-            "query_id", "doc_id", "cos_r", "dot")
-          .withColumn("sem_r", round(col("fused_score"), 6))
-          .select(col("query_id"), col("doc_id"), col("sem_r").as("score")),
+        Fusion.alphaBase(dense, sparse, "query_id", "doc_id", "cos_r", "dot")
+          .join(broadcast(alphas), Seq("query_id"))
+          .select(col("query_id"), col("doc_id"),
+            round(Fusion.alphaFused(col("alpha")), 6).as("score")),
         Seq(col("query_id")), col("score"), col("doc_id"), 60)
-      .select(col("query_id"), col("doc_id"), col("score"))
 
     // RRF semantic + keyword, then boost / dedup / top-k
-    val fused = Fusion.rrf(Seq(semantic, fts), "query_id", "doc_id", "score")
+    val fused = Fusion.rrfRanked(Seq(semantic, fts), "query_id", "doc_id", "rank")
     val hydrated = fused
       .join(docs.select(col("doc_id"), col("lang")), "doc_id")
       .join(broadcast(hints), "query_id")

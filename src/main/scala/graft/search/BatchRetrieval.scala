@@ -25,18 +25,21 @@ import graft.operators.{Fusion, Postings, Scoring, TopK}
   *   max-normalized body BM25 blended with the NameMatcher tier score
   *   at NameBoost (the reference default is 0.2), candidate.rs:416-440,
   *   gated on name-like queries, name_match.rs:22-78) →
-  *   RRF fusion (K=60) keeping a 2×k fused pool (the rrf_fuse
-  *   `limit.saturating_mul(2)`, query.rs:610) →
+  *   RRF fusion (K=60) over the two legs' own per-query ranks (the
+  *   3×k pool's rank, a row_number over the semantic leg), keeping a
+  *   2×k fused pool (the rrf_fuse `limit.saturating_mul(2)`,
+  *   query.rs:610) →
   *   parent dedup (query.rs:625: doc_key already merges window
   *   siblings, and the parents/metadata join keeps one row per
   *   (query, doc), so it needs no operator) →
-  *   parent boost ×(1 + 0.05·children), cap 1.15 (candidate.rs:59) →
+  *   parent boost ×(1 + 0.05·children), cap 1.15 (candidate.rs:59),
+  *   children counted in one per-query window over the 2×k fused pool →
   *   type boost ×1.2 on router type hints (query.rs:655) →
   *   top-k, (score desc, id asc).
   *
   * Every stage is an operator the correctness registry already gates
-  * in isolation (Postings.bm25 = q204/q85, Fusion.rrf = q42, the name
-  * tier ladder = q19, type boost = q42, synonym
+  * in isolation (Postings.bm25 = q204/q85, Fusion.rrfRanked = q42,
+  * the name tier ladder = q19, type boost = q42, synonym
   * expansion = q104, sanitize = q201); this composes them for a real
   * eval artifact where queries arrive as strings.
   *
@@ -335,9 +338,6 @@ object BatchRetrieval {
     // re-executed; sharing at the logical plan level guarantees it)
     val ftsPool = TopK.perGroup(ftsScore, Seq(col("query_id")),
       col("fts_u"), col("doc_key"), k * FtsPoolFactor)
-    val ftsLeg = ftsPool
-      .select(col("query_id"), col("doc_key"),
-        col("fts_u").cast("double").as("score"))
 
     // ---- lexical-semantic leg: normalized body + NameMatcher blend ----
     // name-tier candidates via the name-posting token join (index
@@ -399,15 +399,17 @@ object BatchRetrieval {
       .filter(col("score") > 0)
       .select(col("query_id"), col("doc_key"), col("score"))
 
-    // ---- RRF fusion (K=60), fused pool 2×k ----
-    // legsUnique: ftsLeg is a perGroup pool over the (query, doc)
-    // aggregation and semanticLeg a full-outer join of two unique
-    // frames — both one row per (query_id, doc_key) by construction,
-    // so rrf skips its per-leg dedup exchange (guide §2.4: a distinct
-    // on data that is already unique)
+    // ---- RRF fusion (K=60) over the legs' own ranks, fused pool 2×k ----
+    // Both legs hold one row per (query_id, doc_key) (a pool over the
+    // (query, doc) aggregation; a full-outer join of two such frames),
+    // and ftsPool's (fts_u desc, doc_key asc) rank is already the order
+    // of fts_u as a double (exact below 2^53): only semanticLeg is ranked.
+    val semanticRanked = semanticLeg.withColumn("rank", row_number().over(
+      Window.partitionBy(col("query_id"))
+        .orderBy(col("score").desc, col("doc_key").asc)))
     val fused = TopK.perGroup(
-      Fusion.rrf(Seq(semanticLeg, ftsLeg), "query_id", "doc_key", "score",
-        legsUnique = true),
+      Fusion.rrfRanked(Seq(semanticRanked, ftsPool), "query_id", "doc_key",
+        "rank"),
       Seq(col("query_id")), col("rrf_score"), col("doc_key"),
       k * FusedPoolFactor)
       .select(col("query_id"), col("doc_key"), col("rrf_score"))
@@ -422,21 +424,17 @@ object BatchRetrieval {
     // (query, doc) and needs no dedup after it. The containment parent
     // feeds the BOOST below, which is what moves ranks
     // (candidate.rs:59-120: a container with >= 2 children in the pool
-    // gains 1 + 0.05·children, cap 1.15)
-    val withParent = fused.join(ix.parents, Seq("doc_key"), "left")
+    // gains 1 + 0.05·children, cap 1.15), counted in one unordered
+    // window over the query's ≤ 2×k pool rows (collect_list skips null
+    // parents): the pool is read once, and its query_id partitioning
+    // serves the final top-k too.
+    val boosted = fused.join(ix.parents, Seq("doc_key"), "left")
       .join(ix.meta, Seq("doc_key"))
-    val childCounts = withParent.filter(col("parent_key").isNotNull)
-      .select(col("query_id").as("cq"), col("parent_key").as("ck"))
-      .groupBy(col("cq"), col("ck"))
-      .agg(count(lit(1)).as("n_children"))
-      .filter(col("n_children") >= 2)
-    val boosted = withParent
-      .join(childCounts,
-        col("query_id") === col("cq") && col("doc_key") === col("ck"),
-        "left")
-      .drop("cq", "ck", "parent_key")
+      .withColumn("n_children", size(filter(
+        collect_list(col("parent_key")).over(Window.partitionBy(col("query_id"))),
+        p => p === col("doc_key"))))
       .withColumn("pboost",
-        when(col("n_children").isNotNull,
+        when(col("n_children") >= 2,
           Scoring.parentBoostFactor(col("n_children"))).otherwise(lit(1.0)))
       .join(broadcast(qMeta.select(col("query_id"), col("hints"))),
         Seq("query_id"))

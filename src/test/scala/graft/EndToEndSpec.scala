@@ -147,10 +147,14 @@ class EndToEndSpec extends SparkTestBase {
     assert(all.exists(_.isInstanceOf[ReusedExchangeExec]),
       "no exchange reuse in the hot-path plan")
     // the ranked output of the hot path, pinned row for row: q205
-    // lights the type_filtered hard filter and the parent boost, q206
-    // the negation no-expand and pure-negative demotion (the oracle
-    // checks both outside this suite), and the zero doc-field weight of
-    // identifier_lookup and negation queries moves the third batch
+    // lights the type_filtered hard filter, q206 the negation no-expand
+    // and pure-negative demotion (the oracle checks both outside this
+    // suite), the zero doc-field weight of identifier_lookup and
+    // negation queries moves the third batch, and the parent boost the
+    // fourth: each of its queries names two methods of one fixture
+    // class, the class body matches both, and only the boost of a
+    // container with >= 2 children in the fused pool lifts the class
+    // above them (Service and Tool have two such children, Main three)
     def ranked(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getString(0), r.getInt(1), r.getString(2),
         r.getString(3))).sortBy(r => (r._1, r._2)).toSeq
@@ -161,6 +165,7 @@ class EndToEndSpec extends SparkTestBase {
     assert(ranked(SparkEntry.queries("q206_negation_hotpath")(
       spark, "/root/testdata/sf0.01").collect()) == HotPathRows.q206)
     assert(hotPath(HotPathRows.docWQueries) == HotPathRows.docW)
+    assert(hotPath(HotPathRows.boostQueries) == HotPathRows.boost)
     // a query's rows do not depend on its batch: alone they equal its
     // rows beside a query of positive doc weight
     HotPathRows.docWQueries.foreach { q =>
@@ -179,15 +184,14 @@ class EndToEndSpec extends SparkTestBase {
       spark, "/root/testdata/sf0.01").queryExecution.analyzed
     val antiJoins = plan.collect { case j: Join if j.joinType == LeftAnti => j }
     assert(antiJoins.isEmpty, s"${antiJoins.size} left-anti joins in q206")
-    // the fused pool's per-query top-k is the only window over rrf_score
-    // (its subtree appears once per consumer)
+    // the fused pool's per-query top-k is the only window over rrf_score,
+    // and the parent boost reads that pool without planning it again
     val rrfPartitions = plan.collect {
       case w: Window if w.orderSpec.exists(
         _.child.references.exists(_.name == "rrf_score")) =>
         w.partitionSpec.flatMap(_.references.toSeq).map(_.name)
     }
-    assert(rrfPartitions.nonEmpty)
-    assert(rrfPartitions.forall(_ == Seq("query_id")),
+    assert(rrfPartitions == Seq(Seq("query_id")),
       s"windows over rrf_score partitioned by $rrfPartitions")
   }
 
@@ -213,8 +217,11 @@ class EndToEndSpec extends SparkTestBase {
 }
 
 /** Recorded ranked rows (query_id, rank, file, name) at sf0.01 of
-  * q205, q206 and a batch whose ranks the per-category doc-field
-  * weights decide (at a flat 0.25 "address without guarded" reorders).
+  * q205, q206, a batch whose ranks the per-category doc-field weights
+  * decide (at a flat 0.25 "address without guarded" reorders) and a
+  * batch whose ranks the parent boost decides (with the boost off each
+  * class drops below its children; at a threshold of 3 children
+  * "decorate respond" and "Format Run" do).
   */
 object HotPathRows {
   val q205: Seq[(String, Int, String, String)] = Seq(
@@ -263,4 +270,20 @@ object HotPathRows {
     ("address without guarded", 2, "fixtures/guarded.py", "fetch_guarded"),
     ("address without guarded", 3, "fixtures/guide.md", "Failover"),
     ("address without guarded", 4, "fixtures/api.js", "validate_email"))
+  val boostQueries: Seq[String] = Seq("decorate respond", "Format Run",
+    "main helper")
+  val boost: Seq[(String, Int, String, String)] = Seq(
+    ("Format Run", 1, "fixtures/Tool.cs", "Tool"),
+    ("Format Run", 2, "fixtures/Tool.cs", "Run"),
+    ("Format Run", 3, "fixtures/Tool.cs", "Format"),
+    ("Format Run", 4, "fixtures/util.py", "run"),
+    ("Format Run", 5, "fixtures/view.cshtml", "Badge"),
+    ("decorate respond", 1, "fixtures/Service.java", "Service"),
+    ("decorate respond", 2, "fixtures/Service.java", "decorate"),
+    ("decorate respond", 3, "fixtures/Service.java", "respond"),
+    ("main helper", 1, "fixtures/Main.java", "Main"),
+    ("main helper", 2, "fixtures/Main.java", "main"),
+    ("main helper", 3, "fixtures/Main.java", "helper"),
+    ("main helper", 4, "fixtures/Service.java", "respond"),
+    ("main helper", 5, "fixtures/Main.java", "assemble"))
 }

@@ -53,6 +53,36 @@ class FusionSpec extends SparkTestBase {
     assert(scores.forall(s => s > 0 && s <= 2.0 / 61 + eps))
   }
 
+  test("rrfRanked on the legs' own ranks equals rrf on unique scored legs") {
+    val leg1 = Seq((1L, "a", 3.0), (1L, "b", 2.0), (2L, "a", 1.0))
+      .toDF("query_id", "id", "score")
+    val leg2 = Seq((1L, "b", 5.0), (1L, "c", 1.0), (2L, "c", 4.0))
+      .toDF("query_id", "id", "score")
+    def pool(leg: org.apache.spark.sql.DataFrame) =
+      TopK.perGroup(leg, Seq(col("query_id")), col("score"), col("id"), 10)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
+    assert(rows(Fusion.rrfRanked(Seq(pool(leg1), pool(leg2)), "query_id",
+      "id", "rank")) == rows(Fusion.rrf(Seq(leg1, leg2), "query_id", "id", "score")))
+  }
+
+  test("one alpha base serves a per-query alpha column and each global alpha") {
+    val dense = Seq((1L, "a", 0.9), (2L, "b", 0.3)).toDF("query_id", "id", "cos")
+    val sparse = Seq((1L, "a", 10.0), (1L, "b", 5.0), (2L, "a", 7.0))
+      .toDF("query_id", "id", "dot")
+    val alphas = Seq((1L, 0.7), (2L, 0.2)).toDF("query_id", "alpha")
+    val perQuery = Fusion.alphaBase(dense, sparse, "query_id", "id", "cos", "dot")
+      .join(alphas, Seq("query_id"))
+      .select(col("query_id"), col("id"), Fusion.alphaFused(col("alpha")))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
+    val global = Seq(1L -> 0.7, 2L -> 0.2).flatMap { case (q, a) =>
+      Fusion.alphaInterpolate(dense, sparse, "query_id", "id", "cos", "dot", a)
+        .filter(col("query_id") === q)
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(4)))
+    }.toSet
+    assert(perQuery == global) // bit-identical, not within eps
+  }
+
   test("alpha interpolation: per-query max normalization, absent legs 0") {
     val dense = Seq((1L, "a", 0.9)).toDF("query_id", "id", "cos")
     val sparse = Seq((1L, "a", 10.0), (1L, "b", 5.0)).toDF("query_id", "id", "dot")
