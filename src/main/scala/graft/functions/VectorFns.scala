@@ -61,15 +61,6 @@ object VectorFns {
   def cosineFromNorms(d: Column, na: Column, nb: Column): Column =
     when(na === 0.0 || nb === 0.0, lit(0.0)).otherwise(d / (na * nb))
 
-  /** L2-normalized copy of the vector (unit length), double elements.
-    * Zero vectors pass through unchanged.
-    */
-  def l2Normalize(a: Column): Column = {
-    val n = norm(a)
-    when(n === 0.0, transform(a, x => x.cast("double")))
-      .otherwise(transform(a, x => x.cast("double") / n))
-  }
-
   // ---- integer (micro-unit) kernels: exact LONG accumulation ----
   private def bridge = org.apache.spark.sql.GraftExpressionBridge
 

@@ -54,27 +54,13 @@ object Dedup {
   private[graft] def shinglesHof(text: Column): Column =
     array_distinct(TextFns.wordNgrams(text, 3))
 
-  /** MinHash signature column: for each of numHashes affine functions
-    * h_i(x) = (a_i·x + b_i) mod p over x = xxhash64(shingle) mod p, take
-    * the minimum. All-array higher-order ops — fully codegen'd, no UDF.
-    * Empty shingle set → signature of p (outside the hash range, so it
-    * never collides with a real bucket).
-    */
-  def minhashSignature(shingleCol: Column, numHashes: Int): Column = {
-    val base = transform(shingleCol, s => pmod(xxhash64(s), lit(P)))
-    val sigs = hashParams(numHashes).map { case (a, b) =>
-      when(size(base) === 0, lit(P))
-        .otherwise(array_min(transform(base, h => pmod(h * a + b, lit(P)))))
-    }
-    array(sigs: _*)
-  }
-
-  /** Same signatures as minhashSignature, computed as explode + numHashes
-    * primitive min-aggregates instead of per-row array lambdas. Spark's
-    * higher-order functions are interpreted (CodegenFallback) — at
-    * corpus scale the lambda form burns CPU on boxing; the exploded
-    * groupBy is a codegen'd hash aggregate with map-side combine and
-    * produces bit-identical values. One shuffle on the id.
+  /** MinHash signatures: for each of numHashes affine functions
+    * h_i(x) = (a_i·x + b_i) mod p over x = xxhash64(shingle) mod p, the
+    * minimum over the doc's shingles — computed as explode + numHashes
+    * primitive min-aggregates, not per-row array lambdas. Spark's
+    * higher-order functions are interpreted (CodegenFallback) and box at
+    * corpus scale; the exploded groupBy is a codegen'd hash aggregate
+    * with map-side combine. One shuffle on the id.
     *
     * Docs with empty shingle sets produce no exploded rows and hence no
     * signature — they are naturally absent from the output.
@@ -342,11 +328,6 @@ object Dedup {
       round(size(array_intersect(a, b)).cast("double") / u, 6))
   }
 
-  /** Exhaustive blocked n-gram Jaccard (the exact ground truth LSH is
-    * measured against; also an oracle-checkable operator in its own
-    * right). Pairs are blocked on blockCols to avoid the full cross
-    * product.
-    */
   /** Exhaustive blocked n-gram Jaccard via a shingle POSTING JOIN, not a
     * blocked cross product: |A∩B| is a groupBy-count over the shingle
     * equi-join, and |A∪B| = |A| + |B| − |A∩B| exactly (shingle sets are
@@ -396,50 +377,10 @@ object Dedup {
 
   // --- SimHash ------------------------------------------------------------
 
-  /** 64-bit SimHash of a text: tf-weighted ±1 vote per bit of a stable
-    * 64-bit FNV-1a token hash; bit k of the result = sign of vote k.
-    * Pure Scala (engine-independent by construction) exposed as a UDF —
-    * this is a per-row scalar outside the relational hot path.
-    */
-  def simhash64(text: String): Long = {
-    if (text == null) return 0L
-    val counts = scala.collection.mutable.HashMap.empty[String, Int]
-    // same tokenization contract as TextFns.ftsTokens
-    text.toLowerCase.split("[^a-z0-9]+").foreach { t =>
-      if (t.length >= 2) counts(t) = counts.getOrElse(t, 0) + 1
-    }
-    val votes = new Array[Long](64)
-    counts.foreach { case (tok, tf) =>
-      val h = fnv1a64(tok)
-      var k = 0
-      while (k < 64) {
-        if (((h >>> k) & 1L) == 1L) votes(k) += tf else votes(k) -= tf
-        k += 1
-      }
-    }
-    var out = 0L
-    var k = 0
-    while (k < 64) { if (votes(k) > 0) out |= (1L << k); k += 1 }
-    out
-  }
-
-  private def fnv1a64(s: String): Long = {
-    var h = 0xcbf29ce484222325L
-    var i = 0
-    while (i < s.length) {
-      h ^= s.charAt(i).toLong
-      h *= 0x100000001b3L
-      i += 1
-    }
-    h
-  }
-
-  val simhashUdf = udf((s: String) => simhash64(s))
-
   /** 16-bit column-native SimHash over FTS tokens: bit k of a token is
     * the high bit of hex digit k of md5(token) (digit >= '8' in binary
     * collation); bit k of the signature is the sign of the tf-weighted
-    * vote. Unlike simhash64 this is pure relational algebra — explode →
+    * vote. It is pure relational algebra — explode →
     * tf groupBy → 16 conditional sums — so it is oracle-checkable in
     * ANSI SQL and stays in whole-stage codegen. Docs with zero tokens
     * produce no row (mirrored by the oracle).
@@ -467,93 +408,14 @@ object Dedup {
 
   // --- embedding near-dup -------------------------------------------------
 
-  /** Near-duplicate vectors: within-block all-pairs cosine ≥ threshold.
-    * Blocking (e.g. on a cluster label / coarse quantizer cell) keeps
-    * the pair space linear-ish; at scale the block key would be an IVF
-    * coarse centroid assignment.
-    */
-  /** Deterministic ±1 random-hyperplane set for cosineLsh: plane j,
-    * component i is +1 iff the first hex nibble of md5("j:i") >= 8 —
-    * reproducible on any engine (the oracle embeds the SAME values as
-    * literals), no RNG state.
-    */
-  def hyperplanes(numPlanes: Int, dim: Int): Seq[Seq[Int]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    (0 until numPlanes).map { j =>
-      (0 until dim).map { i =>
-        md.reset()
-        val b = md.digest(s"$j:$i".getBytes("UTF-8"))(0)
-        if (((b >> 4) & 0xf) >= 8) 1 else -1
-      }
-    }
-  }
-
-  /** Global embedding near-dup via random-hyperplane (sign) LSH — the
-    * scale path past blocked pair generation (embeddingNearDup's blocks
-    * bound occupancy but need a block key; this needs none): vectors
-    * whose signed projections agree on every plane of some band become
-    * candidates, then the exact cosine verify keeps precision at 1.0.
-    * Like minhashLsh, candidate generation is a band-key self-join —
-    * work is bounded by bucket occupancy, never O(n²).
-    *
-    * Projections are integer-exact: components are scaled to round(x *
-    * 1e5) BIGINTs before the ±1 dot, so the sign bit is reproducible
-    * bit-for-bit on any engine and any summation order — a double dot
-    * product's sign could flip near zero under reassociation.
-    *
-    * Recall is a (numPlanes, bands) knob measured against the
-    * exhaustive scan in DedupSpec.
-    */
-  def cosineLsh(vectors: DataFrame, idCol: String, vecCol: String,
-                numPlanes: Int, numBands: Int,
-                threshold: Double): DataFrame = {
-    require(numPlanes % numBands == 0,
-      s"numPlanes ($numPlanes) must be a multiple of numBands ($numBands)")
-    val rows = numPlanes / numBands
-    import graft.functions.VectorFns
-    val dim = vectors.select(size(col(vecCol))).head.getInt(0)
-    val planes = hyperplanes(numPlanes, dim)
-    val scaled = transform(col(vecCol),
-      x => round(x.cast("double") * 100000).cast("long"))
-    val bitCols = planes.zipWithIndex.map { case (h, j) =>
-      val lit_h = array(h.map(v => lit(v.toLong)): _*)
-      (aggregate(zip_with(scaled, lit_h, (a, b) => a * b), lit(0L), _ + _) > 0L)
-        .cast("int").as(s"__b$j")
-    }
-    val sig = vectors.select(col(idCol) +: col(vecCol) +: bitCols: _*)
-      .transform(graft.operators.Materialize.stable)
-    val bands = (0 until numBands).map { b =>
-      val key = (0 until rows).map(k => col(s"__b${b * rows + k}") *
-        lit(1 << k)).reduce(_ + _)
-      sig.select(col(idCol), lit(b).as("band_idx"), key.as("band_key"))
-    }.reduce(_ unionByName _)
-    val candidates = bands.as("x").join(bands.as("y"),
-        col("x.band_idx") === col("y.band_idx") &&
-        col("x.band_key") === col("y.band_key") &&
-        col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
-      .distinct()
-    val v = sig.select(col(idCol), col(vecCol))
-      .withColumn("__n", VectorFns.norm(col(vecCol)))
-    candidates
-      .join(v.select(col(idCol).as("id_a"), col(vecCol).as("__va"),
-        col("__n").as("__na")), Seq("id_a"))
-      .join(v.select(col(idCol).as("id_b"), col(vecCol).as("__vb"),
-        col("__n").as("__nb")), Seq("id_b"))
-      .withColumn("cos_r", round(VectorFns.cosineFromNorms(
-        VectorFns.dot(col("__va"), col("__vb")), col("__na"), col("__nb")), 6))
-      .filter(col("cos_r") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cos_r"))
-  }
-
   /** SemDeDup (Abbas et al. 2023): semantic dedup by clustering the
     * embedding space with k-means, then pruning, within each cluster
     * only, every vector that has an earlier-id cluster-mate above the
     * cosine threshold. The cluster step is what makes this the scale
     * path: the pair join is bounded by cluster occupancy (a centroid-
     * count knob), never O(n²) — the same candidate-bounding contract as
-    * minhashLsh/cosineLsh, but driven by learned structure instead of
-    * random projections.
+    * minhashLsh, but driven by learned structure instead of random
+    * hashing.
     *
     * K-means here is one Lloyd step from deterministic seeds (the
     * caller's seedFilter picks them), computed entirely in integer

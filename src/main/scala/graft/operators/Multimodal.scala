@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing: image/audio/video payloads ride as opaque
   * `binary` columns with typed metadata; decode / feature-extract /
@@ -54,15 +53,6 @@ object Multimodal {
         feat = feat)
     }
   }
-
-  val featuresSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false),
-    StructField("n_bytes", LongType, nullable = false),
-    StructField("digest", StringType, nullable = false),
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("feat", ArrayType(FloatType, containsNull = false), nullable = false)))
 
   /** Decode + feature-extract over a media DataFrame with columns
     * (idCol: long, kindCol: string, bytesCol: binary). One StubDecoder

@@ -325,24 +325,16 @@ object NlGen {
     * — the page-loop of the reference becomes ordinary partitioned
     * joins; re-embedding the 'embedded' rows is the q38 partition-
     * lifecycle seam.
-    */
-  def enrichmentPass(chunks: DataFrame, sites: DataFrame,
-      cache: DataFrame, stored: DataFrame): DataFrame =
-    enrichmentApply(enrichmentPrep(chunks, sites, cache), stored)
-
-  /** The stored-hash-INDEPENDENT part of the enrichment pass: context
-    * aggregation, enrichment hashing, skip flags, and NL assembly.
-    * Separated so a multi-pass run (q109's initial-index + incremental
-    * shape) computes the heavy describe/aggregate work ONCE and
-    * re-joins only the per-pass stored table.
-    */
-  def enrichmentPrep(chunks: DataFrame, sites: DataFrame,
-      cache: DataFrame): DataFrame =
-    enrichmentPrep(chunks, sites, cache, describe(chunks))
-
-  /** As above, with the describe() output supplied by the caller —
-    * the served path passes the PERSISTED `nl_describe` store table
-    * (Indexes.nlDescribe) instead of re-deriving it.
+    *
+    * This is the stored-hash-INDEPENDENT part of the pass: context
+    * aggregation, enrichment hashing, skip flags, and NL assembly;
+    * [[enrichmentApply]] classifies the actions against one pass's
+    * stored hashes. The split lets a multi-pass run (q109's
+    * initial-index + incremental shape) compute the heavy
+    * describe/aggregate work ONCE and re-join only the per-pass stored
+    * table. `base` is the describe() output; the served path passes the
+    * PERSISTED `nl_describe` store table (Indexes.nlDescribe) instead of
+    * re-deriving it.
     */
   def enrichmentPrep(chunks: DataFrame, sites: DataFrame,
       cache: DataFrame, base: DataFrame): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew-mitigation utilities for hub-heavy keys (SURVEY §7 M4: "salting
@@ -43,34 +43,5 @@ object Skew {
       .withColumn("__salt", explode(
         array((0 until numSalts).map(s => lit(s.toLong)): _*)))
     salted.join(replicated, Seq(key, "__salt")).drop("__salt")
-  }
-
-  /** Two-phase (salted) aggregation for skewed groupBy keys: partial
-    * aggregate on (key, salt), then final combine on key. Only valid for
-    * algebraic aggregates; exposed for the common count/sum case.
-    * Equivalent to df.groupBy(key).agg(count, sum) — Spark's hash
-    * aggregate already does map-side partials, so this matters when the
-    * REDUCE side of a single key exceeds one task (final combine is
-    * numSalts rows per key, trivial).
-    */
-  def saltedCountSum(df: DataFrame, key: String, uniqueCol: String,
-                     sumCol: String, numSalts: Int): DataFrame = {
-    require(numSalts > 1)
-    df.withColumn("__salt", pmod(xxhash64(col(uniqueCol)), lit(numSalts.toLong)))
-      .groupBy(col(key), col("__salt"))
-      .agg(count(lit(1)).as("__n"), sum(col(sumCol)).as("__s"))
-      .groupBy(col(key))
-      .agg(sum(col("__n")).as("n"), sum(col("__s")).as("sum"))
-  }
-
-  /** Top heavy-hitter keys with their share — the diagnostic that
-    * decides whether to salt (run on a sample at scale).
-    */
-  def heavyHitters(df: DataFrame, key: String, topN: Int): DataFrame = {
-    val total = df.count()
-    df.groupBy(col(key)).agg(count(lit(1)).as("n"))
-      .withColumn("share", round(col("n").cast("double") / total, 6))
-      .orderBy(col("n").desc, col(key).asc)
-      .limit(topN)
   }
 }

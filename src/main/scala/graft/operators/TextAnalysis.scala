@@ -177,21 +177,10 @@ object TextAnalysis {
       .select(col(idCol), col("fp")).distinct()
   }
 
-  /** Doc pairs sharing >= minShared winnowing fingerprints: equi-join on
-    * the fingerprint value (bucketed by construction — no cross
-    * product), pair-count aggregation.
-    */
-  def winnowSharedPairs(docs: DataFrame, idCol: String, textCol: String,
-                        k: Int, w: Int, minShared: Long): DataFrame =
-    // fingerprints are ~len/w per doc; materialize once so the pair
-    // self-join's two branches don't each rerun the md5 kernel
-    winnowSharedPairsFromFps(
-      winnowFingerprints(docs, idCol, textCol, k, w).transform(graft.operators.Materialize.stable),
-      idCol, minShared)
-
-  /** Pair generation over an already-materialized fingerprint table —
-    * the query-time half once the index-build phase has persisted
-    * (id, fp) rows.
+  /** Doc pairs sharing >= minShared winnowing fingerprints, over an
+    * already-materialized (id, fp) table (the persisted `winnow_fps`
+    * artifact): equi-join on the fingerprint value — no cross product —
+    * then a pair-count aggregation.
     */
   def winnowSharedPairsFromFps(fps: DataFrame, idCol: String,
                                minShared: Long): DataFrame =

@@ -52,64 +52,4 @@ object Versioned {
       .filter(col("__rn") === 1 && !col("is_deleted"))
       .drop("__rn", "is_deleted")
   }
-
-  /** Newest generation present in the log (0 for an empty log) — what a
-    * writer reads before preparing a commit.
-    */
-  def currentGen(log: DataFrame): Long =
-    log.agg(coalesce(max(col("gen")), lit(0L))).head().getLong(0)
-
-  /** Optimistic concurrent commit — the transaction-log conflict
-    * protocol the reference gets from SQLite's writer lock and Delta
-    * gets from its commit protocol, at WRITE-SERIALIZABLE granularity:
-    * a writer that prepared its changes against `baseGen` may still
-    * commit after other writers IF the intervening commits touched a
-    * disjoint key set; it must abort and retry (re-read, re-prepare)
-    * iff any commit with gen > baseGen wrote one of its keys.
-    *
-    * Returns Right(newLog) on success (stamped at currentGen+1, which
-    * may be far past baseGen+1), or Left(conflicting ids) on conflict.
-    * The conflict probe and the generation stamp come from ONE
-    * aggregation over the log's post-base slice left-joined to this
-    * commit's key set — at scale the slice is pruned by a
-    * `gen > baseGen` partition filter, and the collected conflict list
-    * is bounded by the commit's own key count, never the table size.
-    */
-  def tryCommit(log: DataFrame, upserts: DataFrame, tombstoneIds: DataFrame,
-                idCol: String, baseGen: Long): Either[Seq[Any], DataFrame] = {
-    val myKeys = upserts.select(col(idCol))
-      .unionByName(tombstoneIds.select(col(idCol))).distinct()
-      .withColumn("__mine", lit(1))
-    // ONE pass over the post-base slice: the conflict probe and the
-    // new generation stamp come from the same scan (a second full-log
-    // max(gen) job would double commit latency on a large log)
-    val probe = log.filter(col("gen") > baseGen)
-      .join(myKeys, Seq(idCol), "left")
-      .agg(coalesce(max(col("gen")), lit(baseGen)).as("max_gen"),
-        collect_set(when(col("__mine") === 1, col(idCol))).as("conflicts"))
-      .head()
-    val conflicting = probe.getSeq[Any](1)
-    if (conflicting.nonEmpty) Left(conflicting)
-    else Right(commit(log, upserts, tombstoneIds, idCol,
-      math.max(baseGen, probe.getLong(0)) + 1))
-  }
-
-  /** Commit with schema evolution on write (Delta `mergeSchema`):
-    * upserts may carry columns the log has never seen — prior log rows
-    * read them as null — and may omit log columns — the new rows carry
-    * null there. Key/gen/tombstone columns are invariant. `asOf` reads
-    * across the evolution boundary unchanged.
-    */
-  def commitEvolved(log: DataFrame, upserts: DataFrame,
-                    tombstoneIds: DataFrame, idCol: String,
-                    gen: Long): DataFrame = {
-    val up = upserts
-      .withColumn("gen", lit(gen))
-      .withColumn("is_deleted", lit(false))
-    val del = tombstoneIds.select(col(idCol))
-      .withColumn("gen", lit(gen))
-      .withColumn("is_deleted", lit(true))
-    log.unionByName(up, allowMissingColumns = true)
-      .unionByName(del, allowMissingColumns = true)
-  }
 }

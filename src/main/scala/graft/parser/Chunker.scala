@@ -2787,15 +2787,6 @@ object Chunker {
     out.distinct.toSeq
   }
 
-  /** Distributed type-edge extraction. */
-  def typeRefDataset(files: DataFrame): Dataset[TypeRef] = {
-    val spark = files.sparkSession
-    import spark.implicits._
-    files.select(col("origin"), col("language"), col("content"))
-      .as[(String, String, String)]
-      .flatMap { case (o, l, c) => chunkFile(o, l, c).flatMap(typeRefs) }
-  }
-
   /** Distributed form: (origin, language, content) rows → Dataset[Chunk]
     * via flatMap — the 1→N generator at scan parallelism.
     */
@@ -2805,15 +2796,6 @@ object Chunker {
     files.select(col("origin"), col("language"), col("content"))
       .as[(String, String, String)]
       .flatMap { case (o, l, c) => chunkFile(o, l, c) }
-  }
-
-  /** Distributed call-edge extraction chained off the same flatMap. */
-  def callSiteDataset(files: DataFrame): Dataset[CallSite] = {
-    val spark = files.sparkSession
-    import spark.implicits._
-    files.select(col("origin"), col("language"), col("content"))
-      .as[(String, String, String)]
-      .flatMap { case (o, l, c) => chunkFile(o, l, c).flatMap(callSites) }
   }
 
   /** Call-edge extraction from an ALREADY-CHUNKED table (the persisted

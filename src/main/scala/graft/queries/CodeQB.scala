@@ -1312,7 +1312,7 @@ private[queries] trait CodeQB { self: CodeQA with CodeQC =>
     * no-context / ambiguous-name skips. Summary/hyde cache rows are
     * md5-stub seeds on content_hash (the q55 seam); `render` carries
     * BOTH to pin the summary-prepend + hyde-append composition.
-    * See NlGen.enrichmentPass for semantics + scale notes.
+    * See NlGen.enrichmentPrep for semantics + scale notes.
     */
   def q109(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

@@ -98,7 +98,6 @@ object Search {
     * the q14 token set as its keyword leg.
     */
   def q15(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
     val emb  = Tables.embeddings(s, dir)
     val qids = Seq(1L, 2L, 3L)
 
@@ -106,15 +105,14 @@ object Search {
       Postings.score(Indexes.postings(s, dir), ftsQueriesDf(s))
         .withColumn("score", col("n_match") * lit(1000000L) + col("tf_sum")),
       Seq(col("query_id")), col("score"), col("doc_id"), 60)
-      .select(col("query_id"), col("doc_id"), col("score").cast("double").as("score"))
 
     val qvecs = emb.filter(col("vec_id").isin(qids: _*))
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
     val denseLeg = Similarity.cosineKnn(qvecs, emb, 60, excludeSelf = false)
-      .select(col("query_id"), col("vec_id").as("doc_id"),
-        col("cos_r").as("score"))
+      .withColumnRenamed("vec_id", "doc_id")
 
-    val fused = Fusion.rrf(Seq(ftsLeg, denseLeg), "query_id", "doc_id", "score")
+    // each leg already holds one ranked row per (query_id, doc_id)
+    val fused = Fusion.rrfRanked(Seq(ftsLeg, denseLeg), "query_id", "doc_id", "rank")
     TopK.perGroup(fused, Seq(col("query_id")), col("rrf_score"), col("doc_id"), 20)
       .select(col("query_id"), col("doc_id"), col("rrf_score"), col("rank"))
   }

@@ -180,33 +180,6 @@ object Router {
     else true
   }
 
-  /** Centroid classifier: cosine of the query embedding against
-    * per-category centroid vectors; the top-1 category OVERRIDES the
-    * rules result only when its margin over the runner-up clears the
-    * gate (the reference's margin-gated centroid override,
-    * /root/reference/src/search/router.rs:1313-1405). Pure driver-side
-    * math — centroids are a broadcast-sized table by construction.
-    */
-  def classifyByCentroid(queryVec: Array[Float],
-                         centroids: Map[String, Array[Float]],
-                         marginGate: Double = 0.05): Option[String] = {
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) {
-        d += a(i).toDouble * b(i); na += a(i).toDouble * a(i)
-        nb += b(i).toDouble * b(i); i += 1
-      }
-      if (na == 0.0 || nb == 0.0) 0.0 else d / (math.sqrt(na) * math.sqrt(nb))
-    }
-    if (centroids.size < 2) return None
-    val scored = centroids.toSeq
-      .map { case (cat, c) => (cat, cos(queryVec, c)) }
-      .sortBy { case (cat, s) => (-s, cat) }
-    val (best, bestScore) = scored.head
-    val margin = bestScore - scored(1)._2
-    if (margin >= marginGate) Some(best) else None
-  }
-
   /** Defense-in-depth FTS query sanitization — the reference's
     * sanitize_fts_query (/root/reference/src/store/mod.rs:222-246):
     * split on whitespace, drop the FTS5 boolean operators (OR / AND /

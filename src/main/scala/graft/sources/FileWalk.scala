@@ -31,10 +31,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Scale: the single-node walk is bounded by the 500k-file DoS rail —
   * the same driver-side listing Spark's own InMemoryFileIndex performs
-  * before a scan. For huge trees on a shared filesystem,
-  * [[walkDistributed]] shards the subtree walks across executors (the
-  * root-level ignore layers ship as raw lines and recompile per task),
-  * which is the shape of Spark's parallel partition discovery.
+  * before a scan.
   */
 object FileWalk {
 
@@ -199,11 +196,10 @@ object FileWalk {
   }
 
   /** Classify one directory child under the full filter chain:
-    * Left(dir) = descend, Right(file) = yield, None = skip. The ONE
-    * copy of the symlink/hidden/worktree/ignore/depth/size/extension
-    * rules, shared by the single-node and distributed walks. A child
-    * vanishing mid-walk (transient FS race) skips that entry, never
-    * the walk — the reference's metadata-failure rule.
+    * Left(dir) = descend, Right(file) = yield, None = skip, by the
+    * symlink/hidden/worktree/ignore/depth/size/extension rules. A child
+    * vanishing mid-walk (transient FS race) skips that entry, never the
+    * walk — the reference's metadata-failure rule.
     */
   private def classify(c: Path, crel: String, childDepth: Int,
                        layers: List[IgnoreLayer], opts: Options,
@@ -312,7 +308,7 @@ object FileWalk {
     * then READ the yielded files distributed (one spark task per path
     * slice; executors read from the shared filesystem), emitting
     * (origin, language, content) rows — exactly what
-    * `Chunker.chunkDataset` / `callSiteDataset` consume. The listing is
+    * `Chunker.chunkDataset` consumes. The listing is
     * tiny (≤ maxFiles paths); the bytes never touch the driver.
     */
   def readFiles(spark: SparkSession, root: String,
@@ -332,64 +328,5 @@ object FileWalk {
         (rel, defaultLanguageByExt.getOrElse(ext, ext),
           new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
       }.toDF("origin", "language", "content")
-  }
-
-  /** Distributed walk for huge trees on a shared filesystem: the driver
-    * filters the ROOT level only (carrying the root's ignore layers as
-    * raw lines — java regex Patterns don't ship well, so each task
-    * recompiles), then each surviving first-level directory walks on an
-    * executor. The `maxFiles` rail applies over the path-sorted union
-    * (deterministic, though not the single-node traversal prefix — both
-    * orders are documented caps, not semantics). Yield set equality with
-    * [[walk]] under the cap is pinned by FileWalkSpec.
-    */
-  def walkDistributed(spark: SparkSession, root: String,
-                      opts: Options): Seq[WalkedFile] = {
-    val rootPath = Paths.get(root)
-    val extsLc = opts.extensions.map(_.toLowerCase).toSet
-    // root-level ignore lines, shipped raw
-    // root layers + the repo info/exclude tail (lowest precedence)
-    val rootLayerLines: Seq[(String, Seq[String])] =
-      if (opts.noIgnore) Nil
-      else (Seq(
-        rootPath.resolve(opts.customIgnoreName),
-        rootPath.resolve(".ignore"),
-        rootPath.resolve(".gitignore"),
-        rootPath.resolve(".git").resolve("info").resolve("exclude"))
-        .filter(Files.isRegularFile(_, LinkOption.NOFOLLOW_LINKS))
-        .map(f => ("", Files.readAllLines(f).asScala.toSeq)))
-    val rootLayers = rootLayerLines.map { case (d, ls) =>
-      IgnoreLayer(d, parseIgnoreLines(ls)) }.toList
-    val children =
-      { val s = Files.list(rootPath)
-        try s.iterator().asScala.toArray.sortBy(_.getFileName.toString)
-        finally s.close() }
-    val rootFiles = mutable.ArrayBuffer[WalkedFile]()
-    val seeds = mutable.ArrayBuffer[String]() // first-level dir names
-    children.foreach { c =>
-      val name = c.getFileName.toString
-      classify(c, name, 1, rootLayers, opts, extsLc) match {
-        case Some(Left(_))  => seeds += name
-        case Some(Right(f)) => rootFiles += f
-        case None           => ()
-      }
-    }
-    val rootStr = root
-    val optsB = opts
-    val linesB = rootLayerLines
-    val shardFiles: Seq[WalkedFile] =
-      if (seeds.isEmpty) Nil
-      else spark.sparkContext
-        .parallelize(seeds.toSeq, seeds.length)
-        .flatMap { seed =>
-          val stack = linesB.map { case (d, ls) =>
-            IgnoreLayer(d, parseIgnoreLines(ls)) }.toList
-          val buf = mutable.ArrayBuffer[WalkedFile]()
-          visit(Paths.get(rootStr).resolve(seed), seed, 1, stack, optsB,
-            optsB.extensions.map(_.toLowerCase).toSet, buf)
-          buf.toSeq
-        }
-        .collect().toSeq
-    (rootFiles.toSeq ++ shardFiles).sortBy(_.path).take(opts.maxFiles)
   }
 }

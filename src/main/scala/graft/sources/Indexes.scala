@@ -370,8 +370,6 @@ object Indexes {
     resolve(s, dir, "copurchase_edges")
   def degrees(s: SparkSession, dir: String): DataFrame = resolve(s, dir, "degrees")
   def edgesOutdeg(s: SparkSession, dir: String): DataFrame = resolve(s, dir, "edges_outdeg")
-  def orientedEdges(s: SparkSession, dir: String): DataFrame =
-    resolve(s, dir, "oriented_edges")
   def triangleCounts(s: SparkSession, dir: String): DataFrame =
     resolve(s, dir, "triangle_counts")
   def winnowFps(s: SparkSession, dir: String): DataFrame = resolve(s, dir, "winnow_fps")
@@ -380,7 +378,6 @@ object Indexes {
   def simhashSigs(s: SparkSession, dir: String): DataFrame = resolve(s, dir, "simhash_sigs")
   def docGrams8(s: SparkSession, dir: String): DataFrame = resolve(s, dir, "doc_grams8")
   def sourceGrams8(s: SparkSession, dir: String): DataFrame = resolve(s, dir, "source_grams8")
-  def docSpans8(s: SparkSession, dir: String): DataFrame = resolve(s, dir, "doc_spans8")
   def gram8Novelty(s: SparkSession, dir: String): DataFrame = resolve(s, dir, "gram8_novelty")
   def span8Rn(s: SparkSession, dir: String): DataFrame = resolve(s, dir, "span8_rn")
   def sourceGram8Kmv(s: SparkSession, dir: String): DataFrame =
@@ -496,36 +493,4 @@ object Indexes {
       timedWrite(out)(n)(th())
     }
   }
-
-  /** Bucketed companions of the two join-heavy index tables, written
-    * through the session catalog (bucketBy is only expressible via
-    * saveAsTable): postings bucketed+sorted BY token, edges BY src.
-    * A scan of either carries its bucket distribution, so equi-joins
-    * on the bucket key need no Exchange on the index side — the
-    * 100 TB posting-join/self-join story (BucketingSpec pins the
-    * no-Exchange plan shape). Opt-in: the plain-parquet path stays
-    * the default because catalog tables are session-scoped here.
-    */
-  def buildBucketed(s: SparkSession, dir: String,
-                    buckets: Int): Seq[(String, Double)] = {
-    def timed(name: String)(df: DataFrame, key: String): (String, Double) = {
-      val t0 = System.nanoTime()
-      df.write.mode("overwrite")
-        .bucketBy(buckets, key).sortBy(key)
-        .format("parquet").saveAsTable(name)
-      name -> (System.nanoTime() - t0) / 1e9
-    }
-    Seq(
-      timed("graft_postings_b")(postings(s, dir), "token"),
-      timed("graft_edges_b")(coPurchaseEdges(s, dir), "src"))
-  }
-
-  /** Catalog-backed bucketed accessors (None when not built). */
-  def bucketedPostings(s: SparkSession): Option[DataFrame] =
-    if (s.catalog.tableExists("graft_postings_b"))
-      Some(s.table("graft_postings_b")) else None
-
-  def bucketedEdges(s: SparkSession): Option[DataFrame] =
-    if (s.catalog.tableExists("graft_edges_b"))
-      Some(s.table("graft_edges_b")) else None
 }

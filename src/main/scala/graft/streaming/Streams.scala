@@ -46,19 +46,6 @@ object Streams {
       .select(col("window.start").as("hour_start"), col("event_type"),
         col("n"), col("sum_k"))
 
-  /** Session-window aggregation using the built-in session_window
-    * (gap-based): sessions close when no event arrives within `gap`.
-    */
-  def sessionWindowAgg(events: DataFrame, gap: String = "30 minutes",
-                       watermark: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), sum(col("k")).as("sum_k"))
-      .select(col("user_id"), col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"), col("n_events"),
-        col("sum_k"))
-
   /** Custom sessionization via flatMapGroupsWithState — the extension
     * point session_window can't express (per-session custom state,
     * emit-on-update, processing-time timeouts). State per user is one
@@ -168,22 +155,6 @@ object Streams {
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(update)
   }
-
-  /** Streaming exact dedup — the ingest-side dedup gate of a training
-    * pipeline (drop re-delivered / re-crawled content as it arrives).
-    * dropDuplicatesWithinWatermark bounds the dedup state by the
-    * watermark horizon: two rows with the same key within the horizon
-    * dedup; state for keys older than the watermark is evicted, so at
-    * 100 TB/day the state store holds only the horizon's keys, not the
-    * corpus. (Plain streaming dropDuplicates would grow state forever —
-    * that is the anti-pattern this wraps away.)
-    */
-  def streamingDedup(events: DataFrame, keyCols: Seq[String],
-                     tsCol: String = "ts",
-                     watermark: String = "1 hour"): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark(keyCols)
 
   /** Stream-static worklist: the watch loop as a continuous query —
     * arriving file fingerprints join the STATIC registry snapshot and

@@ -442,7 +442,7 @@ class ChunkerRouterSpec extends SparkTestBase {
       ("a.py", "python", pySrc)).toDF("origin", "language", "content")
     val ds = Chunker.chunkDataset(files)
     assert(ds.count() == 6)
-    assert(Chunker.callSiteDataset(files).count() >= 4)
+    assert(Chunker.callSitesFromChunks(ds.toDF()).count() >= 4)
   }
 
   test("router classifies with fixed precedence and resolves alpha") {

@@ -111,15 +111,6 @@ class FileWalkSpec extends SparkTestBase {
     } finally rmTree(root)
   }
 
-  test("distributed walk equals the local walk") {
-    val root = mkTree()
-    try {
-      val local = FileWalk.walk(root.toString, opts).toSet
-      val dist = FileWalk.walkDistributed(spark, root.toString, opts).toSet
-      assert(dist === local)
-    } finally rmTree(root)
-  }
-
   test("ingest handoff: walk → distributed read → chunk") {
     val root = Files.createTempDirectory("graft_ingest")
     def put(rel: String, content: String): Unit = {

@@ -3,6 +3,8 @@ package graft
 import java.nio.file.{Files, Path}
 import java.nio.charset.StandardCharsets
 
+import org.scalatest.funsuite.AnyFunSuite
+
 import graft.sources.FileWalk
 import graft.sources.FileWalk.Options
 
@@ -17,7 +19,7 @@ import graft.sources.FileWalk.Options
   * and git's lack of one see the same corpus (git's own `.gitignore`
   * listings are filtered from its output).
   */
-class GitIgnoreParitySpec extends SparkTestBase {
+class GitIgnoreParitySpec extends AnyFunSuite {
 
   private def run(cwd: String, cmd: String*): String = {
     val pb = new ProcessBuilder(cmd: _*)
@@ -129,10 +131,6 @@ class GitIgnoreParitySpec extends SparkTestBase {
         Options(extensions = Seq("py"))).map(_.path).toSet
       assert(walked === gitSet)
       assert(walked === Set("a.py", "lib/keep.py"))
-      // distributed path carries the layer too
-      val dist = FileWalk.walkDistributed(spark, root.toString,
-        Options(extensions = Seq("py"))).map(_.path).toSet
-      assert(dist === walked)
     } finally rmTree(root)
   }
 

@@ -287,132 +287,6 @@ class GraphOpsSpec extends SparkTestBase {
     assert(state(3L) == Map(1L -> "a", 2L -> "b2", 3L -> "c3", 4L -> "d")) // resurrected
   }
 
-  test("Versioned.tryCommit: disjoint concurrent writers both land, overlapping aborts and retries") {
-    import graft.operators.Versioned
-    val base = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
-      .withColumn("gen", lit(1L)).withColumn("is_deleted", lit(false))
-    val noDel = Seq.empty[Tuple1[Long]].toDF("id")
-    // writers A and B both prepared against gen 1
-    val baseGen = Versioned.currentGen(base)
-    assert(baseGen == 1L)
-    // A commits first
-    val afterA = Versioned.tryCommit(base,
-      Seq((2L, "b-A")).toDF("id", "v"), noDel, "id", baseGen)
-      .getOrElse(fail("A must commit"))
-    // B touches a DISJOINT key: lands despite A's intervening commit
-    val afterB = Versioned.tryCommit(afterA,
-      Seq((4L, "d-B")).toDF("id", "v"), noDel, "id", baseGen)
-      .getOrElse(fail("disjoint B must commit"))
-    assert(Versioned.currentGen(afterB) == 3L)
-    val live = Versioned.asOf(afterB, "id", 3L)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(live == Map(1L -> "a", 2L -> "b-A", 3L -> "c", 4L -> "d-B"))
-    // C overlaps A's key from the stale base: must abort with the key...
-    val cUp = Seq((2L, "b-C"), (5L, "e-C")).toDF("id", "v")
-    Versioned.tryCommit(afterB, cUp, noDel, "id", baseGen) match {
-      case Left(conflicts) => assert(conflicts == Seq(2L))
-      case Right(_) => fail("overlapping C must abort")
-    }
-    // ...and wins on retry after re-reading the current generation
-    val afterC = Versioned.tryCommit(afterB, cUp, noDel, "id",
-      Versioned.currentGen(afterB)).getOrElse(fail("retried C must commit"))
-    val live2 = Versioned.asOf(afterC, "id", 4L)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(live2(2L) == "b-C" && live2(5L) == "e-C")
-  }
-
-  test("Versioned.tryCommit: 4-writer race serializes — unique gens, max-gen value survives per key") {
-    // The single-threaded test stages one conflict; this one races four
-    // real threads through the optimistic protocol: PREPARE (read the
-    // shared ref, snapshot baseGen) happens outside any lock so
-    // baseGen goes stale whenever another writer lands in between;
-    // only validate-and-publish is atomic (the counterpart of Delta's
-    // atomic log-entry rename / SQLite's writer lock). A and B write
-    // disjoint keys, C and D contend on key 100.
-    import graft.operators.Versioned
-    import java.util.concurrent.ConcurrentLinkedQueue
-    import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
-    val base = Seq((0L, "seed")).toDF("id", "v")
-      .withColumn("gen", lit(1L)).withColumn("is_deleted", lit(false))
-    val noDel = Seq.empty[Tuple1[Long]].toDF("id")
-    val ref = new AtomicReference(base)
-    val commitLock = new Object
-    val committed = new ConcurrentLinkedQueue[(String, Long, Long, String)]()
-    val aborts = new AtomicInteger(0)
-    val errors = new ConcurrentLinkedQueue[Throwable]()
-    val writers = Seq("A" -> Seq(10L, 11L), "B" -> Seq(20L, 21L),
-      "C" -> Seq(100L, 30L), "D" -> Seq(100L, 40L))
-    val iterations = 3
-    val threads = writers.map { case (w, keys) =>
-      new Thread(() => try {
-        for (i <- 1 to iterations) {
-          var landed = false
-          while (!landed) {
-            val baseGen = Versioned.currentGen(ref.get())
-            val up = keys.map(k => (k, s"$w-$i")).toDF("id", "v")
-            Thread.`yield`()
-            commitLock.synchronized {
-              Versioned.tryCommit(ref.get(), up, noDel, "id", baseGen) match {
-                case Right(newLog) =>
-                  val g = Versioned.currentGen(newLog)
-                  keys.foreach(k => committed.add((w, k, g, s"$w-$i")))
-                  ref.set(newLog)
-                  landed = true
-                case Left(conflicting) =>
-                  // a conflict may only ever name this writer's own keys
-                  assert(conflicting.forall(keys.map(x => x: Any).contains),
-                    s"$w aborted on foreign keys $conflicting")
-                  aborts.incrementAndGet()
-              }
-            }
-          }
-        }
-      } catch { case t: Throwable => errors.add(t) })
-    }
-    threads.foreach(_.start()); threads.foreach(_.join(300000))
-    assert(errors.isEmpty, s"writer thread failed: ${errors.peek()}")
-
-    val records = scala.jdk.CollectionConverters
-      .CollectionHasAsScala(committed).asScala.toSeq
-    // every commit landed exactly once, each stamped a UNIQUE gen, and
-    // the lock-serialized history is gap-free: gens are exactly 2..13
-    val gens = records.map(_._3).distinct.sorted
-    assert(gens == (2L to (1L + writers.size * iterations)).toSeq,
-      s"gens were $gens (aborts: ${aborts.get()})")
-    // serializability: the surviving value per key is the one written
-    // by the commit with the highest generation touching that key
-    val expected = records.groupBy(_._2).map { case (k, rs) =>
-      k -> rs.maxBy(_._3)._4 }
-    val live = Versioned.asOf(ref.get(), "id", Versioned.currentGen(ref.get()))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert((live - 0L) == expected, s"live=$live expected=$expected")
-    // per-writer monotonicity: iteration order survives in gen order
-    writers.foreach { case (w, _) =>
-      val mine = records.filter(_._1 == w).sortBy(_._3).map(_._4).distinct
-      assert(mine == (1 to iterations).map(i => s"$w-$i"),
-        s"$w's commits out of order: $mine")
-    }
-  }
-
-  test("Versioned.commitEvolved: schema evolution on write, asOf spans the boundary") {
-    import graft.operators.Versioned
-    val base = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-      .withColumn("gen", lit(1L)).withColumn("is_deleted", lit(false))
-    // gen 2 adds a column the log has never seen (and keeps v)
-    val evolved = Versioned.commitEvolved(base,
-      Seq((2L, "b2", 0.9)).toDF("id", "v", "score"),
-      Seq.empty[Tuple1[Long]].toDF("id"), "id", 2L)
-    assert(evolved.columns.toSet ==
-      Set("id", "v", "gen", "is_deleted", "score"))
-    val s1 = Versioned.asOf(evolved, "id", 1L).collect()
-      .map(r => r.getLong(0) -> Option(r.getAs[Any]("score"))).toMap
-    assert(s1 == Map(1L -> None, 2L -> None)) // pre-evolution rows read null
-    val s2 = Versioned.asOf(evolved, "id", 2L).collect()
-      .map(r => (r.getLong(0), r.getAs[String]("v"),
-        Option(r.getAs[Any]("score")))).toSet
-    assert(s2 == Set((1L, "a", None), (2L, "b2", Some(0.9))))
-  }
-
   test("q23's physical plan carries the salted join") {
     val plan = SparkEntry.queries("q23_graph_related_cooccur")(
       spark, sf).queryExecution.optimizedPlan.toString

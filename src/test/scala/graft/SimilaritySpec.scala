@@ -23,12 +23,6 @@ class SimilaritySpec extends SparkTestBase {
     assert(df.select(VectorFns.cosine(col("a"), col("b"))).head().getDouble(0) == 0.0)
   }
 
-  test("l2Normalize produces unit vectors") {
-    val df = Seq(Tuple1(Array(3.0f, 4.0f))).toDF("a")
-    val n = df.select(VectorFns.normSq(VectorFns.l2Normalize(col("a")))).head().getDouble(0)
-    assert(math.abs(n - 1.0) < 1e-12)
-  }
-
   test("cosineKnn: finds the exact nearest neighbor, excludes self") {
     val corpus = Seq(
       (0L, Array(1.0f, 0.0f)),

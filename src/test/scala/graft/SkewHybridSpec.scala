@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.Skew
-import graft.search.Router
 
 class SkewHybridSpec extends SparkTestBase {
 
@@ -19,40 +16,6 @@ class SkewHybridSpec extends SparkTestBase {
       .select("k", "row_id", "payload").collect().map(_.toSeq).toSet
     assert(salted == plain)
     assert(salted.size == 201)
-  }
-
-  test("saltedCountSum equals plain groupBy aggregation") {
-    import spark.implicits._
-    val df = (1 to 500).map(i => (if (i % 10 == 0) "cold" else "hot", i.toLong, i.toLong))
-      .toDF("k", "uid", "v")
-    val plain = df.groupBy("k")
-      .agg(count(lit(1)).as("n"), sum("v").as("sum"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    val salted = Skew.saltedCountSum(df, "k", "uid", "v", numSalts = 4)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    assert(salted == plain)
-  }
-
-  test("heavyHitters surfaces the skewed key with its share") {
-    import spark.implicits._
-    val df = ((1 to 90).map(_ => "hub") ++ (1 to 10).map(_ => "x")).toDF("k")
-    val top = Skew.heavyHitters(df, "k", 1).collect()
-    assert(top.head.getString(0) == "hub")
-    assert(top.head.getAs[Double]("share") == 0.9)
-  }
-
-  test("centroid classifier overrides only past the margin gate") {
-    val cats = Map(
-      "structural" -> Array(1f, 0f, 0f),
-      "behavioral" -> Array(0f, 1f, 0f))
-    // clearly structural
-    assert(Router.classifyByCentroid(Array(0.9f, 0.1f, 0f), cats) ==
-      Some("structural"))
-    // near the boundary -> gate holds, no override
-    assert(Router.classifyByCentroid(Array(0.7f, 0.71f, 0f), cats).isEmpty ||
-      Router.classifyByCentroid(Array(0.7f, 0.71f, 0f), cats, marginGate = 0.5).isEmpty)
-    assert(Router.classifyByCentroid(Array(1f, 0f, 0f),
-      Map("only" -> Array(1f, 0f, 0f))).isEmpty, "needs >= 2 centroids")
   }
 
   test("flagship entry returns ranked rows per query at sf0.001") {

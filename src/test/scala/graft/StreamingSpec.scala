@@ -41,21 +41,6 @@ class StreamingSpec extends SparkTestBase {
     assert(got == want)
   }
 
-  test("session_window aggregation closes sessions across the gap") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Event]
-    stream.addData(sampleEvents: _*)
-    val q = Streams.sessionWindowAgg(stream.toDF(), gap = "30 minutes")
-      .writeStream.format("memory").queryName("sessions")
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
-    val got = spark.table("sessions").orderBy("user_id", "session_start")
-      .collect().map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("n_events"),
-        r.getAs[Long]("sum_k"))).toSeq
-    assert(got == Seq((1L, 2L, 5L), (1L, 1L, 1L), (2L, 1L, 7L)))
-  }
-
   test("statefulSessionize emits closed sessions matching the batch mirror") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -114,26 +99,6 @@ class StreamingSpec extends SparkTestBase {
     assert(got == want)
   }
 
-  test("streamingDedup drops within-watermark re-deliveries, keeps distinct keys") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Event]
-    // user 1 click re-delivered at ts(0) and ts(5); the (user, type) key dedups
-    stream.addData(sampleEvents: _*)
-    val q = Streams.streamingDedup(stream.toDF(),
-        keyCols = Seq("user_id", "event_type"), watermark = "2 hours")
-      .writeStream.format("memory").queryName("dedup")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val got = spark.table("dedup")
-      .select("user_id", "event_type")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    // batch mirror: one row per (user_id, event_type)
-    val want = sampleEvents.map(e => (e.user_id, e.event_type)).toSet
-    assert(got == want)
-    assert(spark.table("dedup").count() == want.size) // duplicates dropped
-  }
-
   test("q124 real file-source streaming run equals the batch rollup and leaves no sink view") {
     val got = graft.queries.StreamQ.q124(spark, sf)
       .orderBy("hour", "event_type")
@@ -147,6 +112,21 @@ class StreamingSpec extends SparkTestBase {
     assert(got.nonEmpty && got.sameElements(want))
     assert(!spark.catalog.listTables().collect()
       .exists(_.name.startsWith("q124_sink_")),
+      "memory-sink view must be dropped after the run")
+  }
+
+  test("q144 real file-source streaming dedup equals batch DISTINCT and leaves no sink view") {
+    def keys(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("user_id").cast("long"), col("event_type"), col("day"))
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).sorted.toSeq
+    val got = keys(graft.queries.StreamQ.q144(spark, sf))
+    val want = keys(graft.sources.Tables.events(spark, sf)
+      .select(col("user_id"), col("event_type"),
+        graft.queries.QueryDef.dayStr(col("ts")).as("day"))
+      .distinct())
+    assert(got.nonEmpty && got == want)
+    assert(!spark.catalog.listTables().collect()
+      .exists(_.name.startsWith("q144_sink_")),
       "memory-sink view must be dropped after the run")
   }
 

@@ -71,7 +71,8 @@ class TextAnalysisSpec extends SparkTestBase {
       (2L, base + " extra"),
       (3L, "completely different content about database query optimization")
     ).toDF("doc_id", "text")
-    val pairs = TextAnalysis.winnowSharedPairs(docs, "doc_id", "text", 8, 4, 3L)
+    val pairs = TextAnalysis.winnowSharedPairsFromFps(
+        TextAnalysis.winnowFingerprints(docs, "doc_id", "text", 8, 4), "doc_id", 3L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 2L)))
     assert(!pairs.exists(p => p._2 == 3L || p._1 == 3L))
